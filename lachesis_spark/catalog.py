@@ -931,12 +931,3 @@ class Catalog:
         shutil.rmtree(self.set_path(db, name), ignore_errors=True)
         os.makedirs(self.set_path(db, name), exist_ok=True)
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Convenience loader for the driver testdata star schema."""
-    out: dict[str, DataFrame] = {}
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            out[name] = spark.read.parquet(path)
-    return out

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,6 +39,7 @@ from lachesis_spark.functions import vectors as V
 from lachesis_spark.binding import base_table
 
 from lachesis_spark.operators.core import barrier as _barrier
+from lachesis_spark.operators.core import driver_edges, driver_frame
 
 N_BANDS = 8
 SHINGLE_N = 3
@@ -479,12 +481,6 @@ def _minhash_pairs_raw(spark, sf_dir):
 # enough (≤ 2·pairs rows of two longs ≈ 64 MB worst-case) to broadcast
 # per sweep; above it, sweeps take the co-partitioned shuffle plan
 CC_BROADCAST_PAIR_LIMIT = 2_000_000
-# Pair sets at or under this many (doubled, undirected) edges run the
-# cc_converged loop on a single stats-clamped partition: ≤ ~2 MB of edge
-# rows per sweep task (~12 MB), where exchange-free narrow sweeps beat any
-# parallel plan (job launch dominates).  Bigger sets keep the
-# broadcast/shuffle regimes.
-CC_SINGLE_PARTITION_EDGE_LIMIT = 1 << 19
 # Convergence-probe cadence for cc_converged: sweeps run lazily in
 # chunks of this size with ONE probe job per chunk (see the loop note).
 CC_SWEEPS_PER_PROBE = 2
@@ -539,8 +535,7 @@ def _cc_sweep(edges, label, n_parts=None, broadcast_label=False):
     )
 
 
-def _cc_sweep_fused(edges, label, n_parts=None, broadcast_label=False,
-                    single=False):
+def _cc_sweep_fused(edges, label, n_parts=None, broadcast_label=False):
     """One min-label sweep as a SINGLE aggregation: fold the messages INTO
     the label rows and take one min per node — every node owns a label
     row, so min over {own lbl} ∪ {neighbor lbls} is exactly
@@ -550,28 +545,13 @@ def _cc_sweep_fused(edges, label, n_parts=None, broadcast_label=False,
     and a join in shuffle mode).  ONLY for the checkpointed
     :func:`cc_converged` loop: inside :func:`cc_fixed`'s single unrolled
     plan this form defeats exchange reuse across the duplicated label
-    subtrees (measured 10 → 85 jobs), so cc_fixed keeps :func:`_cc_sweep`.
-
-    ``single`` (tiny pair sets, gated by CC_SINGLE_PARTITION_EDGE_LIMIT in
-    cc_converged): both frames live on ONE stats-clamped partition, so the
-    hinted ShuffledHashJoin and the group-min plan ZERO exchanges and zero
-    broadcast-BUILD jobs — each sweep is one narrow task instead of a
-    broadcast job + a multi-stage AQE cascade (the plans/la.py pattern)."""
-    if single:
-        label_side = label.hint("shuffle_hash")
-    elif broadcast_label:
-        label_side = F.broadcast(label)
-    else:
-        label_side = label
+    subtrees (measured 10 → 85 jobs), so cc_fixed keeps :func:`_cc_sweep`."""
+    label_side = F.broadcast(label) if broadcast_label else label
     messages = edges.join(label_side, edges["v"] == label["node"]).select(
         F.col("u").alias("node"), "lbl"
     )
     u = label.unionByName(messages)
-    if single:
-        # the union of two 1-partition children reports 2 partitions —
-        # narrow-coalesce back to one so the group-min plans no exchange
-        u = u.coalesce(1)
-    elif n_parts is not None and not broadcast_label:
+    if n_parts is not None and not broadcast_label:
         u = u.repartition(n_parts, "node")
     return u.groupBy("node").agg(F.min("lbl").alias("lbl"))
 
@@ -590,74 +570,69 @@ def cc_fixed(pairs, iters: int = CC_ITERS):
     return label.select(F.col("node").alias("doc_id"), F.col("lbl").alias("canonical_id"))
 
 
+def _cc_driver(spark, nodes, ui, vi, max_sweeps):
+    """cc_converged's driver kernel: min-label propagation on node indices
+    (ids sorted, so the smallest index is the smallest id) plus pointer
+    jumping — lbl[x] always names a node of x's component with
+    lbl[x] <= x, so lbl[lbl[x]] keeps both and collapses a label chain in
+    log steps instead of one hop per sweep."""
+    lbl = np.arange(len(nodes))
+    for _ in range(max_sweeps):
+        new = lbl.copy()
+        np.minimum.at(new, ui, lbl[vi])
+        while not np.array_equal(new[new], new):
+            new = new[new]
+        if np.array_equal(new, lbl):
+            return driver_frame(spark, doc_id=nodes, canonical_id=nodes[lbl])
+        lbl = new
+    raise RuntimeError(f"cc_converged did not converge in {max_sweeps} sweeps")
+
+
 def cc_converged(pairs, max_sweeps: int = 200):
     """Min-label propagation TO CONVERGENCE — the production form.
 
     A fixed sweep count silently mis-groups any component whose label chain
     is deeper than the count (incremental template drift on a 100 TB corpus
     produces exactly such chains), so this iterates until a sweep changes
-    nothing.  The convergence test costs one tiny aggregation per sweep,
-    no extra join: labels only ever DECREASE (each sweep takes a least()
-    with the neighborhood min), so the label sum is strictly decreasing
-    until the fixpoint and "sum unchanged" ⟺ "no label changed".  The sum
-    runs in decimal(38,0) so it cannot overflow at any node-count/id scale.
+    nothing, and raises if ``max_sweeps`` runs out first.
 
-    Every sweep lazily ``localCheckpoint``s the node-sized label frame and
-    the convergence probe materializes it — ONE job per sweep; lineage
-    stays one sweep deep, and superseded checkpoint blocks are
-    GC-released.  Sweep count is bounded by the component diameter, not by
-    a guess."""
+    Edge lists under the driver gate (:func:`driver_edges`) are collected
+    and labeled by :func:`_cc_driver`.  Bigger ones sweep in Spark, where
+    the convergence test costs one tiny aggregation per sweep, no extra
+    join: labels only ever DECREASE (each sweep takes a least() with the
+    neighborhood min), so the label sum is strictly decreasing until the
+    fixpoint and "sum unchanged" ⟺ "no label changed".  The sum runs in
+    decimal(38,0) so it cannot overflow at any node-count/id scale.  Every
+    sweep lazily ``localCheckpoint``s the node-sized label frame and the
+    convergence probe materializes it; lineage stays one sweep deep, and
+    superseded checkpoint blocks are GC-released."""
     pairs = pairs.cache()  # read twice by the edge union; released just below
     # size-gated plan choice, decided from the ACTUAL edge count (one
-    # metadata-cheap job on the already-checkpointed edge frame — the
-    # load-time observation every adaptive planner needs): reduced pair
-    # sets broadcast the node-sized label per sweep (fastest measured
-    # local plan, zero sweep shuffles of real data); pair sets too big for
-    # a safe broadcast re-partition once onto the label-join key and take
-    # the co-partitioned shuffle plan with the width scoped per-frame
-    # (that one extra edge shuffle is noise next to corpus-scale sweeps).
-    # Neither path writes the session conf (test-locked in
-    # tests/test_dedup_components.py).
-    # LAZY checkpoints throughout the loop (round-11, guide §1.2 "per-task
-    # work" at the job level): each sweep's convergence probe is the ONE
-    # action that also materializes that sweep's checkpoint, halving the
-    # job count per sweep vs the old eager-checkpoint-then-probe pair —
-    # the sweeps are node-sized, so job launch was the dominant cost.
-    # Same pattern as plans/la.py's chunked Newton-Schulz loop.
+    # job on the checkpointed edge frame): small edge lists go to the
+    # driver; reduced pair sets broadcast the node-sized label per sweep
+    # (fastest measured Spark plan, zero sweep shuffles of real data);
+    # pair sets too big for a safe broadcast re-partition once onto the
+    # label-join key and take the co-partitioned shuffle plan with the
+    # width scoped per-frame.  No path writes the session conf
+    # (test-locked in tests/test_dedup_components.py).  Checkpoints are
+    # LAZY: each sweep's convergence probe is the one action that also
+    # materializes its checkpoint (plans/la.py's chunked-loop pattern).
     edges = _cc_edges(pairs, "u").transform(_barrier)
     n_parts = edges.rdd.getNumPartitions()
     n_edges = edges.count()
-    broadcast_ok = n_edges <= 2 * CC_BROADCAST_PAIR_LIMIT
-    # Tiny pair sets (the near-dup regime at test scale, and any
-    # incremental batch): run the whole loop on ONE stats-clamped
-    # partition — hinted ShuffledHashJoin + group-min with ZERO exchanges
-    # and zero broadcast-build jobs, one narrow job per sweep (the
-    # plans/la.py single-partition pattern: the coalesce(1) after each
-    # barrier restores the SinglePartition badge an AQE-wrapped
-    # checkpoint drops, and limit(n_edges) — an identity, labels ≤ nodes
-    # ≤ edges rows — clamps the size estimate EnsureRequirements would
-    # otherwise re-shuffle on).  Larger sets keep the broadcast/shuffle
-    # regimes unchanged; the gate is row-count based, so at 100 TB the
-    # corpus-scale pair sets never take the serial path.
-    single = n_edges <= CC_SINGLE_PARTITION_EDGE_LIMIT
     pairs.unpersist()
-    if single:
-        cap = int(n_edges)
-        edges = edges.coalesce(1).transform(_barrier).coalesce(1).limit(cap)
-        nodes = edges.select(F.col("u").alias("node")).distinct()
-        label = (
-            nodes.withColumn("lbl", F.col("node"))
-            .transform(_barrier).coalesce(1).limit(cap)
-        )
-    else:
-        if not broadcast_ok:
-            edges = edges.repartition(n_parts, "v").transform(_barrier)
-        nodes = (
-            edges.select(F.col("u").alias("node"))
-            .repartition(n_parts, "node")
-            .distinct()
-        )
-        label = nodes.withColumn("lbl", F.col("node")).transform(_barrier)
+    g = driver_edges(edges, n_edges)
+    if g is not None:
+        return _cc_driver(edges.sparkSession, *g, max_sweeps)
+    broadcast_ok = n_edges <= 2 * CC_BROADCAST_PAIR_LIMIT
+    if not broadcast_ok:
+        edges = edges.repartition(n_parts, "v").transform(_barrier)
+    nodes = (
+        edges.select(F.col("u").alias("node"))
+        .repartition(n_parts, "node")
+        .distinct()
+    )
+    label = nodes.withColumn("lbl", F.col("node")).transform(_barrier)
     # Probe every CC_SWEEPS_PER_PROBE sweeps instead of every sweep: the
     # loop is probe-latency-bound (~0.2 s job launch + codegen per probe,
     # measured), and because labels only ever DECREASE, "sum unchanged
@@ -671,11 +646,8 @@ def cc_converged(pairs, max_sweeps: int = 200):
         todo = min(CC_SWEEPS_PER_PROBE, max_sweeps - done)
         for _ in range(todo):
             label = _cc_sweep_fused(
-                edges, label, n_parts,
-                broadcast_label=broadcast_ok and not single, single=single,
+                edges, label, n_parts, broadcast_label=broadcast_ok
             ).transform(_barrier)
-            if single:
-                label = label.coalesce(1).limit(cap)
         done += todo
         s = label.agg(
             F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")

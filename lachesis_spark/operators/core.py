@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
+import numpy as np
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -72,6 +73,36 @@ def barrier(df: DataFrame, eager: bool = False) -> DataFrame:
     if eager:
         out.count()
     return out
+
+
+# Edge rows (both directions) at or under which the graph loops —
+# dedup.cc_converged, graph_algos.kcore_layers / sssp_hops / lpa_labels —
+# collect their edges and iterate in numpy on the driver: 2^19 rows of two
+# longs is 8 MB, where a Spark sweep is a job launch around microseconds of
+# work.  An actual row count, so corpus-scale graphs keep the Spark loops.
+DRIVER_LOOP_EDGE_LIMIT = 1 << 19
+
+
+def driver_edges(edges: DataFrame, n_edges: int | None):
+    """The one small-input gate.  ``edges`` holds (u, v) for every edge in
+    both directions, and ``n_edges`` is the caller's own count of its rows.
+    At most DRIVER_LOOP_EDGE_LIMIT rows: one Arrow collect, returned as
+    (sorted node ids, u, v) with u and v as indices into the node ids.
+    Otherwise (or count unknown): ``None`` — run the Spark loop."""
+    if n_edges is None or n_edges > DRIVER_LOOP_EDGE_LIMIT:
+        return None
+    u, v = (c.to_numpy().astype(np.int64) for c in edges.toArrow().columns)
+    nodes, ui = np.unique(u, return_inverse=True)
+    return nodes, ui, np.searchsorted(nodes, v)
+
+
+def driver_frame(spark, **cols) -> DataFrame:
+    """A driver kernel's long columns as a one-partition LocalRelation:
+    exact size stats, and a caller's aggregate or sort plans no exchange."""
+    import pyarrow as pa
+
+    tbl = pa.table({k: np.asarray(v, dtype=np.int64) for k, v in cols.items()})
+    return spark.createDataFrame(tbl).coalesce(1)
 
 
 def selection(

@@ -33,12 +33,14 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lachesis_spark.plans.iterative import PR_MOD, _edges
 
 from lachesis_spark.operators.core import barrier as _barrier
+from lachesis_spark.operators.core import driver_edges, driver_frame
 
 TOP_PAIRS = 20
 
@@ -388,12 +390,28 @@ KCORE_ORACLE_DEPTH = 16  # unroll budget; > observed peel depth (≤5) at every
 #                          Spark side is depth-independent), never pass silently
 
 
-#  Doubled-edge row count at or under which the graph loops run on a
-#  single stats-clamped partition (~12 MB of edge rows): exchange-free
-#  hinted hash joins, one narrow job per sweep — the plans/la.py /
-#  dedup.cc_converged pattern.  Corpus-scale graphs keep the partitioned
-#  paths (the gate is an actual row count, never a guess).
-GRAPH_SINGLE_PARTITION_EDGE_LIMIT = 1 << 19
+def _directed(und: DataFrame) -> DataFrame:
+    """Both directions of every undirected edge, as (u, v)."""
+    return und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
+        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    )
+
+
+def _kcore_driver(nodes, u, v, k):
+    """Peel layers on the driver: per round, bincount the alive–alive
+    edges into degrees and remove every alive node below ``k``."""
+    n = len(nodes)
+    alive = np.ones(n, dtype=bool)
+    layer = np.zeros(n, dtype=np.int64)
+    r = 0
+    while True:
+        r += 1
+        both = alive[u] & alive[v]
+        gone = alive & (np.bincount(u[both], minlength=n) < k)
+        if not gone.any():
+            return layer
+        layer[gone] = r
+        alive &= ~gone
 
 
 def kcore_layers(
@@ -410,47 +428,31 @@ def kcore_layers(
     conf), alive set checkpointed per sweep, exit when a sweep removes
     nothing.  Sweep count = peel depth (graph-dependent, typically
     O(log n) on heavy-tailed graphs); the alive frame only shrinks, so
-    per-sweep cost falls monotonically."""
-    spark = und.sparkSession
+    per-sweep cost falls monotonically.  Graphs under the driver gate
+    (``m`` edges given and small) peel in numpy instead."""
+    g = driver_edges(_directed(und), None if m is None else 2 * m)
+    if g is not None:
+        layer = _kcore_driver(*g, k)
+        return driver_frame(und.sparkSession, node=g[0], layer=layer).orderBy("node")
     # edges live partitioned by the NEIGHBOR endpoint v: the per-sweep
     # alive-filter join (on v) is then co-partitioned and exchange-free,
-    # and the only shuffle a sweep pays is the degree groupBy on u.  The
-    # earlier u-partitioned layout filtered u first and paid two more
-    # edge-sized exchanges per sweep (re-hash on v, then back on u);
-    # filtering dead u's is NOT needed before the groupBy — their degree
+    # and the only shuffle a sweep pays is the degree groupBy on u.
+    # Filtering dead u's is NOT needed before the groupBy — their degree
     # rows are dropped by the alive-side join below, and the bytes they
-    # add to the one shuffle are less than the exchanges they saved.
-    ee = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    # add to the one shuffle cost less than a second edge-sized exchange.
+    e = _directed(und).repartition(n_parts, "v").transform(_barrier, eager=True)
+    alive = (
+        e.select(F.col("u").alias("node")).distinct()
+        .repartition(n_parts, "node")
+        .transform(_barrier, eager=True)
     )
-    small = m is not None and 2 * m <= GRAPH_SINGLE_PARTITION_EDGE_LIMIT
-    if small:
-        # single-partition regime: every sweep join/aggregate plans zero
-        # exchanges (hinted hash join over stats-clamped SinglePartition
-        # frames; limit(2m) is an identity — the doubled edge list is
-        # exactly 2m rows, alive/layer frames at most that), so a sweep
-        # is ONE narrow job (its exit count) instead of an AQE stage
-        # cascade per checkpoint.
-        cap = 2 * int(m)
-        e = ee.coalesce(1).transform(_barrier, eager=True).coalesce(1).limit(cap)
-        alive = (
-            e.select(F.col("u").alias("node")).distinct()
-            .transform(_barrier).coalesce(1).limit(cap)
-        )
-    else:
-        e = ee.repartition(n_parts, "v").transform(_barrier, eager=True)
-        alive = (
-            e.select(F.col("u").alias("node")).distinct()
-            .repartition(n_parts, "node")
-            .transform(_barrier, eager=True)
-        )
     layers = None
     r = 0
     while True:
         r += 1
         alive_v = alive.select(F.col("node").alias("v"))
         deg = (
-            e.join(alive_v.hint("shuffle_hash") if small else alive_v, "v")
+            e.join(alive_v, "v")
             .groupBy("u")
             .agg(F.count(F.lit(1)).alias("d"))
         )
@@ -459,21 +461,16 @@ def kcore_layers(
         # in a single lazily-checkpointed frame — the exit-check count is
         # the job that materializes it, and the next sweep's alive plus
         # this sweep's removed layer are both cheap filters over the
-        # persisted RDD.  The previous shape re-executed the whole
-        # degree join a second time per sweep (removed.count() for the
-        # exit check, then the eager alive checkpoint recomputing
-        # alive⋈keep from scratch).  Nodes with zero alive neighbors are
-        # absent from deg — the left join's coalesce(0) removes them.
+        # persisted RDD, so the degree join runs once per sweep.  Nodes
+        # with zero alive neighbors are absent from deg — the left join's
+        # coalesce(0) removes them.
         degn = deg.select(F.col("u").alias("node"), "d")
-        ann = alive.join(
-            degn.hint("shuffle_hash") if small else degn, "node", "left"
-        ).select(
-            "node", (F.coalesce(F.col("d"), F.lit(0)) >= k).alias("keep")
+        ann = (
+            alive.join(degn, "node", "left")
+            .select("node", (F.coalesce(F.col("d"), F.lit(0)) >= k).alias("keep"))
+            .repartition(n_parts, "node")
+            .transform(_barrier)
         )
-        if small:
-            ann = ann.transform(_barrier).coalesce(1).limit(cap)
-        else:
-            ann = ann.repartition(n_parts, "node").transform(_barrier)
         n_removed = ann.filter(~F.col("keep")).count()
         if n_removed == 0:
             break
@@ -482,11 +479,6 @@ def kcore_layers(
         )
         if layers is None:
             layers = removed
-        elif small:
-            layers = (
-                layers.unionByName(removed)
-                .coalesce(1).transform(_barrier).coalesce(1).limit(cap)
-            )
         else:
             layers = layers.unionByName(removed).transform(_barrier)
         alive = ann.filter(F.col("keep")).select("node")
@@ -557,6 +549,33 @@ SSSP_ORACLE_DEPTH = 32  # oracle recursion bound; > observed eccentricity at
 #                         pass silently.  The Spark side is depth-independent.
 
 
+def _bfs_driver(nodes, u, v, src):
+    """Frontier BFS on the driver over a CSR adjacency (argsort +
+    searchsorted): (reached node ids, hop distance); a source outside the
+    graph reaches only itself."""
+    n = len(nodes)
+    s = int(np.searchsorted(nodes, src))
+    if s == n or nodes[s] != src:
+        return np.array([src]), np.array([0])
+    order = np.argsort(u, kind="stable")
+    nbr = v[order]
+    start = np.searchsorted(u[order], np.arange(n + 1))
+    dist = np.full(n, -1, dtype=np.int64)
+    dist[s] = 0
+    frontier = np.array([s])
+    level = 0
+    while frontier.size:
+        level += 1
+        lo, cnt = start[frontier], start[frontier + 1] - start[frontier]
+        # every frontier node's neighbor slice, gathered in one index array
+        pos = np.repeat(lo - np.cumsum(cnt) + cnt, cnt) + np.arange(cnt.sum())
+        nxt = np.unique(nbr[pos])
+        frontier = nxt[dist[nxt] < 0]
+        dist[frontier] = level
+    seen = dist >= 0
+    return nodes[seen], dist[seen]
+
+
 def sssp_hops(
     und: DataFrame, src: int, n_parts: int = 32, m: int | None = None
 ) -> DataFrame:
@@ -568,28 +587,18 @@ def sssp_hops(
     O(log n)); the per-level join is frontier-sized, never graph-sized, and
     both frames are explicitly repartitioned on their key — the session
     shuffle conf is never touched.  Unreachable nodes are absent (standard
-    BFS contract)."""
+    BFS contract).  Graphs under the driver gate run :func:`_bfs_driver`."""
     spark = und.sparkSession
-    ee = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    g = driver_edges(_directed(und), None if m is None else 2 * m)
+    if g is not None:
+        node, dist = _bfs_driver(*g, src)
+        return driver_frame(spark, node=node, dist=dist)
+    e = _directed(und).repartition(n_parts, "u").transform(_barrier, eager=True)
+    dist = (
+        spark.createDataFrame([(src, 0)], "node long, dist long")
+        .repartition(n_parts, "node")
+        .transform(_barrier, eager=True)
     )
-    small = m is not None and 2 * m <= GRAPH_SINGLE_PARTITION_EDGE_LIMIT
-    if small:
-        # single-partition regime (see kcore_layers); the seed frame is
-        # range-based so its stats are truthful from the start.
-        cap = 2 * int(m)
-        e = ee.coalesce(1).transform(_barrier, eager=True).coalesce(1).limit(cap)
-        dist = spark.range(1).select(
-            F.lit(src).cast("long").alias("node"),
-            F.lit(0).cast("long").alias("dist"),
-        ).coalesce(1)
-    else:
-        e = ee.repartition(n_parts, "u").transform(_barrier, eager=True)
-        dist = (
-            spark.createDataFrame([(src, 0)], "node long, dist long")
-            .repartition(n_parts, "node")
-            .transform(_barrier, eager=True)
-        )
     frontier = dist
     prev_frontier = None
     level = 0
@@ -604,29 +613,19 @@ def sssp_hops(
         # expansion distinct); the expansion join, both anti-joins and
         # the exit count ride the pinned hash(node) layout, and the lazy
         # checkpoint makes the exit count the level's only action.
-        fu = frontier.select(F.col("node").alias("u"))
         nxt = (
-            e.join(fu.hint("shuffle_hash") if small else fu, "u")
+            e.join(frontier.select(F.col("node").alias("u")), "u")
             .select(F.col("v").alias("node"))
             .distinct()
-        )
-        if not small:
-            nxt = nxt.repartition(n_parts, "node")
-        fa = frontier.select("node")
-        nxt = nxt.join(
-            fa.hint("shuffle_hash") if small else fa, "node", "left_anti"
+            .repartition(n_parts, "node")
+            .join(frontier.select("node"), "node", "left_anti")
         )
         if prev_frontier is not None:
-            pa = prev_frontier.select("node")
-            nxt = nxt.join(
-                pa.hint("shuffle_hash") if small else pa, "node", "left_anti"
-            )
+            nxt = nxt.join(prev_frontier.select("node"), "node", "left_anti")
         nxt = (
             nxt.select("node", F.lit(level).cast("long").alias("dist"))
             .transform(_barrier)
         )
-        if small:
-            nxt = nxt.coalesce(1).limit(cap)
         if nxt.count() == 0:  # one bounded action per level — the exit check
             break
         dist = dist.unionByName(nxt)
@@ -643,7 +642,7 @@ def graph_sssp(spark, sf_dir):
     O(diameter) at any corpus scale."""
     und = undirected_edges(spark, sf_dir).transform(_barrier, eager=True)
     # one job for BOTH scalars: the BFS source and the edge count that
-    # gates the single-partition loop regime
+    # gates the driver loop regime
     pr = und.agg(F.min("a").alias("src"), F.count(F.lit(1)).alias("m")).collect()[0]
     d = sssp_hops(und, int(pr["src"]), m=int(pr["m"]))
     return (
@@ -697,6 +696,22 @@ LPA_ROUNDS = 4  # FIXED round count so the oracle unrolls the identical
 #                 label) makes every round reproducible cross-engine.
 
 
+def _lpa_driver(nodes, u, v, rounds):
+    """Synchronous LPA on the driver over node-index labels (ids sorted,
+    so the smallest index is the smallest label): count each (node,
+    neighbor label) vote, keep the highest count, ties to the smallest."""
+    n = len(nodes)
+    lab = np.arange(n)
+    for _ in range(rounds):
+        keys, c = np.unique(u * n + lab[v], return_counts=True)
+        node, lbl = keys // n, keys % n
+        o = np.lexsort((lbl, -c, node))
+        # first row per node; every node has a neighbor, so one per node
+        _, first = np.unique(node[o], return_index=True)
+        lab = lbl[o][first]
+    return nodes[lab]
+
+
 def lpa_labels(
     und: DataFrame, rounds: int = LPA_ROUNDS, n_parts: int = 32,
     m: int | None = None,
@@ -709,41 +724,27 @@ def lpa_labels(
     Scale shape: per round ONE co-partitioned edges⋈labels join + one
     (node, label)-count aggregation + one per-node argmax — all keyed on
     the node id, label frame checkpointed per round (the kcore/cc loop
-    pattern); rounds are FIXED, not data-dependent."""
+    pattern); rounds are FIXED, not data-dependent.  Graphs under the
+    driver gate vote in numpy (:func:`_lpa_driver`)."""
+    g = driver_edges(_directed(und), None if m is None else 2 * m)
+    if g is not None:
+        return driver_frame(und.sparkSession, node=g[0], lbl=_lpa_driver(*g, rounds))
     # FIXED round count and every frame used exactly once downstream, so
     # the whole loop runs LAZILY: all checkpoints are eager=False and the
     # caller's single final action materializes the full 4-round chain in
     # ONE Spark job (each round's checkpoint persists as a byproduct,
-    # keeping lineage shallow for any re-reference).  The previous
-    # eager-per-round cadence paid rounds+2 sequential job launches for
-    # identical work — pure fixed overhead on a reduced-size label frame.
-    ee = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    # keeping lineage shallow for any re-reference).
+    e = _directed(und).repartition(n_parts, "v").transform(_barrier)
+    lab = (
+        e.select(F.col("u").alias("node")).distinct()
+        .select("node", F.col("node").alias("lbl"))
+        .repartition(n_parts, "node")
+        .transform(_barrier)
     )
-    small = m is not None and 2 * m <= GRAPH_SINGLE_PARTITION_EDGE_LIMIT
-    if small:
-        # single-partition regime (see kcore_layers): the 4-round lazy
-        # chain plans zero exchanges, so the caller's one action runs it
-        # as one narrow job cascade with no per-checkpoint AQE stage jobs.
-        cap = 2 * int(m)
-        e = ee.coalesce(1).transform(_barrier).coalesce(1).limit(cap)
-        lab = (
-            e.select(F.col("u").alias("node")).distinct()
-            .select("node", F.col("node").alias("lbl"))
-            .transform(_barrier).coalesce(1).limit(cap)
-        )
-    else:
-        e = ee.repartition(n_parts, "v").transform(_barrier)
-        lab = (
-            e.select(F.col("u").alias("node")).distinct()
-            .select("node", F.col("node").alias("lbl"))
-            .repartition(n_parts, "node")
-            .transform(_barrier)
-        )
     for _ in range(rounds):
         lv = lab.select(F.col("node").alias("v"), "lbl")
         votes = (
-            e.join(lv.hint("shuffle_hash") if small else lv, "v")
+            e.join(lv, "v")
             .groupBy(F.col("u").alias("node"), "lbl")
             .agg(F.count(F.lit(1)).alias("c"))
         )
@@ -753,23 +754,17 @@ def lpa_labels(
             .agg(F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("neg"))).alias("s"))
             .select("node", (-F.col("s.neg")).alias("lbl"))
         )
-        if small:
-            lab = lab.transform(_barrier).coalesce(1).limit(cap)
-        else:
-            lab = lab.repartition(n_parts, "node").transform(_barrier)
+        lab = lab.repartition(n_parts, "node").transform(_barrier)
     return lab
 
 
 def graph_lpa(spark, sf_dir):
     """Community-size distribution after LPA_ROUNDS of label propagation:
     (community_size, n_communities) — the model-sized summary a community
-    dashboard renders (per-node labels stay engine-side).  und is consumed
-    exactly once (the edge build inside lpa_labels), so its checkpoint is
-    lazy too — the query's one action runs everything."""
+    dashboard renders (per-node labels stay engine-side).  The edge count
+    that gates the driver regime also materializes und's lazy checkpoint,
+    so the collect (or the Spark chain) reads persisted blocks."""
     und = undirected_edges(spark, sf_dir).transform(_barrier)
-    # the count gates the single-partition loop regime AND materializes
-    # und's lazy barrier, so the 4-round chain builds from persisted
-    # blocks (one bounded job; the loop itself then runs exchange-free)
     m = und.count()
     lab = lpa_labels(und, m=m)
     sizes = lab.groupBy("lbl").agg(F.count(F.lit(1)).cast("long").alias("csize"))

@@ -3,21 +3,15 @@
 '*, add/subtract, scale, max/min element, rowMax/rowMin/colMax/colMin,
 rowSum/colSum, duplicateRow/duplicateCol —
 src/linearAlgebraDSL/source/LAEvaluateFunctions.cc:256-341) re-expressed on
-DataFrames in two representations:
+DataFrames in COO form (i, j, v): element-wise ops as joins/aggregations,
+multiply as the reference's join-on-index + aggregate-sum plan
+(LAEvaluateFunctions.cc:213-341).  DuckDB can unnest the same data, so every
+query is oracle-gated.
 
-1. **COO** (i, j, v) — element-wise ops as joins/aggregations.  Used for the
-   driver's oracle-gated queries (DuckDB can unnest the same data).
-2. **Block** (row_blk, col_blk, rows, cols, data) — the reference's
-   MatrixBlock model (block ids + dense double block,
-   LAEvaluateFunctions.cc:19-30): multiply = equi-join on the inner block
-   index + numpy GEMM per pair + aggregate-sum of partial blocks, exactly the
-   reference's JoinComp+AggregateComp plan but with Arrow-batched pandas UDFs
-   doing the dense math.
-
-Scale: block matmul shuffles on (row_blk, col_blk) with combine-side partial
-sums — the same dataflow the reference runs distributed; block size (e.g.
-1000×1000 doubles = 8 MB) keeps any single task's working set bounded, and
-Catalyst broadcasts the smaller operand's blocks when one matrix is thin.
+Scale: matmul shuffles on the contraction index, then on (i, j) with
+combine-side partial sums — the same dataflow the reference runs
+distributed; Catalyst broadcasts the smaller operand when one matrix is
+thin.
 """
 
 from __future__ import annotations
@@ -26,7 +20,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from lachesis_spark.binding import base_table
 
@@ -584,94 +577,6 @@ def duplicate_row(row_vec: DataFrame, n: int) -> DataFrame:
         F.col("j"),
         F.col("v"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Block representation (reference MatrixBlock: block ids + dense data)
-BLOCK_SCHEMA = T.StructType(
-    [
-        T.StructField("row_blk", T.IntegerType()),
-        T.StructField("col_blk", T.IntegerType()),
-        T.StructField("rows", T.IntegerType()),
-        T.StructField("cols", T.IntegerType()),
-        T.StructField("data", T.ArrayType(T.DoubleType())),
-    ]
-)
-
-
-def block_matmul(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Block GEMM: join A.col_blk == B.row_blk, numpy-multiply each block
-    pair (Arrow-batched), then sum partial blocks per output (row_blk,
-    col_blk) — the reference's exact plan (LAEvaluateFunctions.cc:213-341)
-    with Tungsten shuffle + pandas UDF GEMM.
-    """
-    import pandas as pd  # noqa: F401
-
-    paired = a.select(
-        F.col("row_blk"), F.col("col_blk").alias("k"), F.col("rows").alias("a_rows"),
-        F.col("cols").alias("a_cols"), F.col("data").alias("a_data"),
-    ).join(
-        b.select(
-            F.col("row_blk").alias("k2"), F.col("col_blk"), F.col("rows").alias("b_rows"),
-            F.col("cols").alias("b_cols"), F.col("data").alias("b_data"),
-        ),
-        F.col("k") == F.col("k2"),
-    )
-
-    def gemm(iterator):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in iterator:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                am = np.asarray(r.a_data, dtype=np.float64).reshape(r.a_rows, r.a_cols)
-                bm = np.asarray(r.b_data, dtype=np.float64).reshape(r.b_rows, r.b_cols)
-                cm = am @ bm
-                outs.append(
-                    (r.row_blk, r.col_blk, cm.shape[0], cm.shape[1], cm.ravel().tolist())
-                )
-            yield pd.DataFrame(
-                outs, columns=["row_blk", "col_blk", "rows", "cols", "data"]
-            )
-
-    partial = paired.mapInPandas(gemm, schema=BLOCK_SCHEMA)
-
-    def merge_blocks(pdf):
-        import numpy as np
-        import pandas as pd
-
-        acc = np.zeros(len(pdf.iloc[0]["data"]), dtype=np.float64)
-        for d in pdf["data"]:
-            acc += np.asarray(d, dtype=np.float64)
-        first = pdf.iloc[0]
-        return pd.DataFrame(
-            [(first["row_blk"], first["col_blk"], first["rows"], first["cols"],
-              acc.tolist())],
-            columns=["row_blk", "col_blk", "rows", "cols", "data"],
-        )
-
-    return partial.groupBy("row_blk", "col_blk").applyInPandas(
-        merge_blocks, schema=BLOCK_SCHEMA
-    )
-
-
-def block_transpose(a: DataFrame) -> DataFrame:
-    """Transpose block ids and each dense block (numpy per block)."""
-    def tr(iterator):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in iterator:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                m = np.asarray(r.data, dtype=np.float64).reshape(r.rows, r.cols).T
-                outs.append((r.col_blk, r.row_blk, m.shape[0], m.shape[1], m.ravel().tolist()))
-            yield pd.DataFrame(outs, columns=["row_blk", "col_blk", "rows", "cols", "data"])
-
-    import pandas as pd  # noqa: F401
-
-    return a.mapInPandas(tr, schema=BLOCK_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -71,11 +71,13 @@ class LAInterpreter:
         self.env: dict[str, DataFrame] = {}
         self.toks: list[tuple[str, str]] = []
         self.pos = 0
-        # STRUCTURAL PROVENANCE: ids of DataFrames known symmetric
-        # positive (semi)definite by construction — ``A '* A`` (Gram).
-        # inverse() uses it to pick the cheaper SPD Newton init (the
-        # result is still convergence-probed, never assumed).
-        self._spd: set[int] = set()
+        # STRUCTURAL PROVENANCE: DataFrames known symmetric positive
+        # (semi)definite by construction — ``A '* A`` (Gram).  inverse()
+        # uses it to pick the cheaper SPD Newton init (the result is still
+        # convergence-probed, never assumed).  The sets hold the frames
+        # themselves (DataFrame hashes by identity), never their id()s: a
+        # freed frame's id can be reused by an unrelated matrix.
+        self._spd: set[DataFrame] = set()
         # RHS reference counts per bound name (filled by a pre-parse
         # scan): a matrix the script reads twice or more is barriered
         # with a lazy localCheckpoint at BIND time, so e.g.
@@ -85,7 +87,7 @@ class LAInterpreter:
         # would trade two parquet scans for a corpus-sized block-manager
         # footprint — the wrong trade at 100 TB.
         self._refs: dict[str, int] = {}
-        self._loads: set[int] = set()
+        self._loads: set[DataFrame] = set()
 
     # -- token stream -------------------------------------------------------
     def _peek(self):
@@ -117,14 +119,14 @@ class LAInterpreter:
             if (
                 self._refs.get(name, 0) >= 2
                 and not isinstance(last, float)
-                and id(last) not in self._loads
+                and last not in self._loads
             ):
                 # read-once barrier for multiply-referenced matrices
                 # (lazy: the first consumer's action materializes it)
                 from lachesis_spark.operators.core import barrier
                 ck = barrier(last)
-                if id(last) in self._spd:
-                    self._spd.add(id(ck))
+                if last in self._spd:
+                    self._spd.add(ck)
                 last = ck
             self.env[name] = last
         if last is None:
@@ -176,7 +178,7 @@ class LAInterpreter:
                 acc = la.matmul(la.transpose(lhs), rhs)
                 if lhs is rhs:
                     # A '* A is a Gram matrix — SPD by construction
-                    self._spd.add(id(acc))
+                    self._spd.add(acc)
             elif (k, v) == ("op", "*"):
                 self._next()
                 rhs = self._factor()
@@ -217,7 +219,7 @@ class LAInterpreter:
             if table != "embeddings":
                 raise NameError(f"load: unknown table {table!r}")
             out = la.coo_from_embeddings(self.spark, self.sf_dir)
-            self._loads.add(id(out))
+            self._loads.add(out)
             return out
         if fn == "identity":
             n = int(float(self._expect("num")))
@@ -240,7 +242,7 @@ class LAInterpreter:
         if fn == "inverse":
             # Gram provenance → SPD Newton init (cheaper probe + no
             # M₀/closing matmuls); convergence is still residual-probed.
-            return la.inverse_auto(mat, spd=id(mat) in self._spd)
+            return la.inverse_auto(mat, spd=mat in self._spd)
         simple = {
             "transpose": la.transpose, "inverse": la.inverse_auto,
             "rowSum": la.row_sum, "colSum": la.col_sum,

@@ -299,8 +299,7 @@ def stream_sessions_tws(events: DataFrame, gap_sec: int = 600) -> DataFrame:
     plumbing-real/dependency-gated pattern as the multimodal codecs.
     On an environment with protobuf, the output is row-identical to
     :func:`stream_custom_sessions` by construction (same fold, same
-    emission rule) and ``STREAM_SESSION_TWS_SQL`` below is its
-    watermark-closeable oracle."""
+    emission rule)."""
     import datetime as _dt
 
     try:
@@ -477,56 +476,6 @@ def stream_session_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _state_partitions(spark):
         run_to_memory(stream_session_counts(ev), "q_stream_session", "complete")
     return spark.table("q_stream_session")
-
-
-def stream_session_tws_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-facing form of the transformWithStateInPandas sessionizer
-    (append mode): every session the watermark could close is emitted —
-    with availableNow the final cleanup batch carries watermark = max
-    event ts, so exactly the sessions with sess_end <= max(ts) fire their
-    timers.  ``STREAM_SESSION_TWS_SQL`` is the batch gaps-and-islands SQL
-    restricted to that closeable set (the per-user open tail session
-    legitimately stays in state, as any indefinitely-running deployment
-    would keep it).  NOT in the registry: the operator's protobuf
-    dependency gate (see :func:`stream_sessions_tws`) cannot be satisfied
-    in this container — register it where protobuf exists."""
-    ev = read_events_stream(spark, sf_dir)
-    with _state_partitions(spark), _state_store_provider(
-        spark, ROCKSDB_STATE_PROVIDER  # the only provider TWS supports
-    ):
-        run_to_memory(stream_sessions_tws(ev), "q_stream_sess_tws", "append")
-    got = spark.table("q_stream_sess_tws")
-    return got.select(
-        "user_id",
-        F.col("sess_start").cast("timestamp_ntz").alias("sess_start"),
-        F.col("sess_end").cast("timestamp_ntz").alias("sess_end"),
-        "n_events",
-        "sum_value",
-    )
-
-
-STREAM_SESSION_TWS_SQL = """
-WITH ordered AS (
-  SELECT user_id, ts, value,
-         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                   <= INTERVAL '10 minutes'
-              THEN 0 ELSE 1 END AS brk
-  FROM events
-),
-sess AS (
-  SELECT user_id, ts, value,
-         sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-                        ROWS UNBOUNDED PRECEDING) AS sid
-  FROM ordered
-)
-SELECT * FROM (
-  SELECT user_id, min(ts) AS sess_start,
-         max(ts) + INTERVAL '10 minutes' AS sess_end,
-         count(*) AS n_events, sum(value) AS sum_value
-  FROM sess GROUP BY user_id, sid
-)
-WHERE sess_end <= (SELECT max(ts) FROM events)
-"""
 
 
 def stream_running_totals_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -739,12 +688,13 @@ def stream_click_purchase_left_join(events: DataFrame) -> DataFrame:
 def _staged_dir_schema(spark: SparkSession, src: str):
     """Schema of a staged replay dir, cached on its _source.stamp content
     (the stamp pins the exact build — same read-once rationale as
-    _EVENTS_SCHEMA_CACHE)."""
+    _EVENTS_SCHEMA_CACHE).  A dir without a stamp has no version to key
+    on, so its schema is read fresh every time."""
     try:
         with open(os.path.join(src, "_source.stamp")) as f:
             key = (src, f.read())
     except OSError:
-        key = (src, None)
+        return spark.read.parquet(src).schema
     if key not in _EVENTS_SCHEMA_CACHE:
         _EVENTS_SCHEMA_CACHE[key] = (spark.read.parquet(src).schema, None)
     return _EVENTS_SCHEMA_CACHE[key][0]

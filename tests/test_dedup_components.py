@@ -125,7 +125,11 @@ def test_cc_sweep_exchanges_are_pair_set_width(spark):
 def test_cc_converged_shuffle_and_broadcast_paths_agree(spark, monkeypatch):
     """The size gate picks broadcast sweeps for reduced pair sets and
     co-partitioned shuffle sweeps for corpus-scale ones; both must produce
-    identical labelings (forced here by zeroing the gate)."""
+    identical labelings (forced here by zeroing the gate).  The driver
+    gate is zeroed too, so both runs take a Spark loop."""
+    from lachesis_spark.operators import core
+
+    monkeypatch.setattr(core, "DRIVER_LOOP_EDGE_LIMIT", 0)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21), (4, 10)],
         "a_id bigint, b_id bigint",

@@ -231,3 +231,23 @@ def test_power_iteration_matches_numpy_replication(spark):
     assert abs(out.eigval.iloc[0] - v @ G @ v) < 1e-4
     # power iteration on an SPD matrix: Rayleigh quotient is non-decreasing
     assert all(b >= a - 1e-9 for a, b in zip(rayleighs, rayleighs[1:]))
+
+
+def test_dsl_provenance_never_points_at_a_dead_frame(spark):
+    """SPD/load provenance must name frames that are still alive.  ``G``
+    is read twice, so run() swaps the Gram for its checkpoint and drops
+    the original; a provenance entry kept as that frame's id() would
+    outlive it, and CPython may hand the id to an unrelated matrix."""
+    import gc
+
+    from pyspark.sql import DataFrame
+
+    interp = la_dsl.LAInterpreter(spark, SF_SMOKE)
+    out = interp.run("A = load(embeddings)\nG = A '* A\nS = G + G\n")
+    gc.collect()
+    live = {id(o) for o in gc.get_objects() if isinstance(o, DataFrame)}
+    entries = list(interp._spd) + list(interp._loads)
+    assert entries
+    for e in entries:
+        assert (e if isinstance(e, int) else id(e)) in live
+    assert interp.env["G"] in interp._spd and out is interp.env["S"]

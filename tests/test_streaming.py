@@ -778,3 +778,16 @@ def test_staged_replay_rebuild_race_loser_adopts_winner(tmp_path, monkeypatch):
 
     with _pytest.raises(OSError):
         S._reuse_or_build_dir(d, str(src), "other-tag", build)
+
+
+def test_staged_dir_schema_not_cached_without_stamp(spark, tmp_path):
+    """A staged dir without ``_source.stamp`` has no version to key a
+    cache on: rebuilding it with a different schema must be seen."""
+    import shutil
+
+    d = str(tmp_path / "staged")
+    spark.createDataFrame([(1, "a")], "k long, s string").write.parquet(d)
+    assert S._staged_dir_schema(spark, d).fieldNames() == ["k", "s"]
+    shutil.rmtree(d)
+    spark.createDataFrame([(1.5,)], "x double").write.parquet(d)
+    assert S._staged_dir_schema(spark, d).fieldNames() == ["x"]
