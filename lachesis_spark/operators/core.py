@@ -12,6 +12,7 @@ survives a 1000-executor / 100 TB deployment.
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Callable, Sequence
 
 import numpy as np
@@ -42,13 +43,18 @@ def barrier_mode(spark) -> str:
                    executor recomputes instead of failing the query; the
                    trade is that plan growth is not truncated, so loop
                    operators should configure a checkpoint dir in real
-                   deployments (documented in SCALE.md).
+                   deployments (documented in SCALE.md); :func:`barrier`
+                   warns the first time it takes this form in a process.
     """
     if spark.sparkContext.master.startswith("local"):
         return "local"
     if spark.sparkContext._jsc.sc().getCheckpointDir().isDefined():
         return "reliable"
     return "disk"
+
+
+# disk mode warns once per process (see barrier)
+_disk_warned = False
 
 
 def barrier(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -69,27 +75,40 @@ def barrier(df: DataFrame, eager: bool = False) -> DataFrame:
         return df.localCheckpoint(eager=eager)
     if mode == "reliable":
         return df.checkpoint(eager=eager)
+    global _disk_warned
+    if not _disk_warned:
+        _disk_warned = True
+        warnings.warn(
+            "barrier(): no checkpoint dir on a cluster master, so barriers "
+            "persist DISK_ONLY and keep lineage; loop plans grow every "
+            "iteration.  Set a checkpoint dir to truncate them.",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     out = df.persist(StorageLevel.DISK_ONLY)
     if eager:
         out.count()
     return out
 
 
-# Edge rows (both directions) at or under which the graph loops —
-# dedup.cc_converged, graph_algos.kcore_layers / sssp_hops / lpa_labels —
-# collect their edges and iterate in numpy on the driver: 2^19 rows of two
-# longs is 8 MB, where a Spark sweep is a job launch around microseconds of
-# work.  An actual row count, so corpus-scale graphs keep the Spark loops.
-DRIVER_LOOP_EDGE_LIMIT = 1 << 19
+# Rows at or under which a loop collects its input and iterates in numpy on
+# the driver: the graph loops' edges in both directions (dedup.cc_converged,
+# graph_algos.kcore_layers / sssp_hops / lpa_labels) and the LA loops' n×n
+# matrix entries (la.inverse_auto, la.dominant_eigenpair).  2^19 (i, j, v)
+# rows is about 12 MB, where a Spark sweep is a job launch around
+# microseconds of work.  An actual size, so corpus-scale inputs keep the
+# Spark loops.
+DRIVER_LOOP_ROW_LIMIT = 1 << 19
 
 
 def driver_edges(edges: DataFrame, n_edges: int | None):
-    """The one small-input gate.  ``edges`` holds (u, v) for every edge in
-    both directions, and ``n_edges`` is the caller's own count of its rows.
-    At most DRIVER_LOOP_EDGE_LIMIT rows: one Arrow collect, returned as
-    (sorted node ids, u, v) with u and v as indices into the node ids.
-    Otherwise (or count unknown): ``None`` — run the Spark loop."""
-    if n_edges is None or n_edges > DRIVER_LOOP_EDGE_LIMIT:
+    """The one small-input gate for the graph loops.  ``edges`` holds (u, v)
+    for every edge in both directions, and ``n_edges`` is the caller's own
+    count of its rows.  At most DRIVER_LOOP_ROW_LIMIT rows: one Arrow
+    collect, returned as (sorted node ids, u, v) with u and v as indices
+    into the node ids.  Otherwise (or count unknown): ``None`` — run the
+    Spark loop."""
+    if n_edges is None or n_edges > DRIVER_LOOP_ROW_LIMIT:
         return None
     u, v = (c.to_numpy().astype(np.int64) for c in edges.toArrow().columns)
     nodes, ui = np.unique(u, return_inverse=True)
@@ -97,11 +116,16 @@ def driver_edges(edges: DataFrame, n_edges: int | None):
 
 
 def driver_frame(spark, **cols) -> DataFrame:
-    """A driver kernel's long columns as a one-partition LocalRelation:
-    exact size stats, and a caller's aggregate or sort plans no exchange."""
+    """A driver kernel's columns as a one-partition LocalRelation: float
+    arrays become double columns, everything else long.  Exact size stats,
+    and a caller's aggregate or sort plans no exchange."""
     import pyarrow as pa
 
-    tbl = pa.table({k: np.asarray(v, dtype=np.int64) for k, v in cols.items()})
+    arrays = {k: np.asarray(v) for k, v in cols.items()}
+    tbl = pa.table({
+        k: a.astype(np.float64 if a.dtype.kind == "f" else np.int64)
+        for k, a in arrays.items()
+    })
     return spark.createDataFrame(tbl).coalesce(1)
 
 

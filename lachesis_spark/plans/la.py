@@ -16,13 +16,14 @@ thin.
 
 from __future__ import annotations
 
-import os
+import math
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lachesis_spark.binding import base_table
-
+from lachesis_spark.operators import core
 from lachesis_spark.operators.core import barrier as _barrier
 
 
@@ -53,10 +54,7 @@ def transpose(a: DataFrame) -> DataFrame:
     return a.select(F.col("j").alias("i"), F.col("i").alias("j"), "v")
 
 
-def matmul(
-    a: DataFrame, b: DataFrame, n_parts: int | None = None,
-    hint_broadcast: bool = False, hint_shuffle_hash: bool = False,
-) -> DataFrame:
+def matmul(a: DataFrame, b: DataFrame, n_parts: int | None = None) -> DataFrame:
     """A %*% B on COO: equi-join on the contraction index + group-sum
     (the reference's join-on-block-index + aggregate plan,
     LAEvaluateFunctions.cc:213-341).  Shuffles both sides on the inner index,
@@ -68,22 +66,11 @@ def matmul(
     (:func:`inverse_newton`) so the loop never narrows the session-global
     ``spark.sql.shuffle.partitions`` (which would leak into concurrently
     planned queries in a shared driver).  The join itself is left to
-    Catalyst: checkpointed iterates carry size stats, so reduced-dim
-    matrices plan exchange-free broadcast joins and distributed-scale
-    matrices shuffle at the session width, AQE-coalesced.  A checkpointed
-    iterate's LogicalRDD carries no small-size stats STATICALLY, so when
-    the caller knows B is reduced-dim it passes ``hint_broadcast`` to plan
-    the exchange-free broadcast join up front instead of paying a
-    session-width shuffle that AQE only repairs after the fact."""
+    Catalyst: a small operand with size stats (e.g. a driver-side
+    :func:`inverse`) is broadcast, anything else shuffles at the session
+    width, AQE-coalesced."""
     aa = a.select(F.col("i").alias("ai"), F.col("j").alias("k"), F.col("v").alias("av"))
     bj = b.select(F.col("i").alias("k2"), F.col("j").alias("bj"), F.col("v").alias("bv"))
-    if hint_broadcast:
-        bj = F.broadcast(bj)
-    elif hint_shuffle_hash:
-        # single-partition callers (both sides stats-clamped on one
-        # partition): plans ShuffledHashJoin with no exchange AND no
-        # detached broadcast-build job (see inverse_newton's fused step)
-        bj = bj.hint("shuffle_hash")
     joined = aa.join(bj, F.col("k") == F.col("k2"))
     if n_parts is not None:
         joined = joined.select("ai", "bj", "av", "bv").repartition(n_parts, "ai", "bj")
@@ -147,26 +134,28 @@ def min_element(a: DataFrame) -> DataFrame:
     return a.agg(F.min("v").alias("v"))
 
 
-def inverse(a: DataFrame) -> DataFrame:
-    """Matrix inverse (LAPostfixExpressionNode.h:30-32).  The reference
-    gathers the matrix and inverts densely with Eigen; same strategy here:
-    collect the (small — dim×dim, e.g. a Gram matrix) COO to the driver,
-    ``numpy.linalg.inv``, re-distribute.  Inverse is inherently a dense
-    global op — at scale you invert reduced matrices (Gram/covariance),
-    never the data matrix itself."""
-    import numpy as np
-
-    rows = a.collect()
-    n = int(max(max(r["i"] for r in rows), max(r["j"] for r in rows))) + 1
+def _dense(a: DataFrame) -> np.ndarray:
+    """COO ``a`` as a dense numpy matrix on the driver: one Arrow collect,
+    sized by the largest index, duplicate (i, j) entries summed (as
+    :func:`matmul`'s group-sum treats them)."""
+    i, j, v = (c.to_numpy() for c in a.select("i", "j", "v").toArrow().columns)
+    n = int(max(i.max(), j.max())) + 1
     m = np.zeros((n, n))
-    for r in rows:
-        m[int(r["i"]), int(r["j"])] = float(r["v"])
-    inv = np.linalg.inv(m)
-    spark = a.sparkSession
-    return spark.createDataFrame(
-        [(i, j, float(inv[i, j])) for i in range(n) for j in range(n)],
-        "i bigint, j bigint, v double",
-    )
+    np.add.at(m, (i, j), v)
+    return m
+
+
+def inverse(a: DataFrame) -> DataFrame:
+    """Matrix inverse (LAPostfixExpressionNode.h:30-32) on the driver, the
+    reference's strategy: gather the matrix and invert it densely (Eigen
+    there, ``numpy.linalg.inv`` here, which raises on a singular matrix).
+    Every entry comes back as a one-partition (i, j, v) frame.  Inverse is
+    a dense global op — at scale you invert reduced matrices
+    (Gram/covariance), never the data matrix itself; :func:`inverse_auto`
+    sends anything above the driver gate to :func:`inverse_newton`."""
+    inv = np.linalg.inv(_dense(a))
+    i, j = np.divmod(np.arange(inv.size), inv.shape[0])
+    return core.driver_frame(a.sparkSession, i=i, j=j, v=inv.ravel())
 
 
 def identity_coo(spark: SparkSession, n: int) -> DataFrame:
@@ -184,72 +173,55 @@ LAST_INVERSE_STATS: dict[str, int] = {}
 
 def inverse_newton(
     a: DataFrame, n: int | None = None, iters: int = 25, tol: float = 1e-9,
-    spd: bool = False, chunk: int = 4, materialized: bool = False,
+    spd: bool = False, chunk: int = 4,
 ) -> DataFrame:
     """Fully DISTRIBUTED inverse via Newton–Schulz iteration:
 
         X₀ = Aᵀ / (‖A‖₁·‖A‖∞),   X_{k+1} = X_k (2I − A X_k)
 
     Composed entirely from the COO algebra (transpose/scale/matmul/add), so
-    every step is a Spark join+agg — nothing is ever gathered to the driver.
+    every step is a Spark join+agg and only scalars reach the driver.
     Quadratically convergent for any nonsingular A under this init
     (Pan & Schreiber's classic residual bound ‖I − A X₀‖₂ < 1).
 
-    This is the 100 TB-scale counterpart of :func:`inverse` (driver-side
-    dense, the reference's Eigen-gather design, kept only for k×k
-    internals): the registry's ``la_inverse_identity`` runs through THIS
-    path.  The loop runs in M-SPACE (M = A·X, Q = the running product of
-    the per-step polynomials P = 2cI − c²M, so X = X₀·Q): each step
-    advances M and Q together via ONE join + ONE group-sum over a tagged
-    pair frame — algebraically the step's two matmuls, with each matmul's
-    own aggregation fused into the outer add's group-sum (the sum is
-    associative) and the two right-multiplications by the same P sharing
-    one physical join.
+    This is the partitioned counterpart of the driver-side :func:`inverse`
+    (the reference's Eigen-gather design); :func:`inverse_auto` runs it for
+    matrices above the driver gate.  The loop runs in M-SPACE (M = A·X,
+    Q = the running product of the per-step polynomials P = 2cI − c²M, so
+    X = X₀·Q): each step advances M and Q together via ONE join + ONE
+    group-sum over a tagged pair frame — algebraically the step's two
+    matmuls, with each matmul's own aggregation fused into the outer add's
+    group-sum (the sum is associative) and the two right-multiplications
+    by the same P sharing one physical join.
 
     Steps execute in CHUNKS of ``chunk`` with one residual probe per
-    chunk and a LAZY ``localCheckpoint`` per STEP (the probe's job
-    materializes the chunk's whole pending RDD chain, so a chunk still
-    costs ≈1 Spark action; the per-step checkpoints bound optimizer/
-    codegen cost at one step — the fused step references mq 3×, so an
-    uncheckpointed chunk grows 3^chunk subtree copies and the probe wall
-    becomes compile time: measured 4.4 s/chunk-2 uncheckpointed vs 2.9 s
-    with per-step checkpoints, 60 s at chunk 6 uncheckpointed vs 2.8 s).
+    chunk and a LAZY checkpoint per STEP (the probe's job materializes
+    the chunk's whole pending RDD chain, so a chunk still costs ≈1 Spark
+    action; the per-step checkpoints bound optimizer/codegen cost at one
+    step — the fused step references mq 3×, so an uncheckpointed chunk
+    grows 3^chunk subtree copies and the probe wall becomes compile time).
     The scaled iteration's residual recursion is deterministic given a
     probed residual, so the intra-chunk re-centering scalars are derived
     analytically and the chunk runs lazily in a single plan.
-    Convergence is still only ever declared from a PROBED residual — a
-    drifted prediction merely costs a couple of extra scheduled steps.
-    ``materialized=True`` promises the caller already checkpointed ``a``
-    (skips a redundant copy job).  For ``spd``, the ‖A‖∞ probe and the
-    FIRST residual probe are one n-row collect: the residual of
-    M₀ = A/‖A‖∞ is an exact per-row function of (row abs-sum, max
-    off-diagonal |a_ij|, a_ii), so the first chunk schedules without its
-    own probe job.
+    Convergence is only ever declared from a PROBED residual below
+    ``tol``; when ``iters`` steps run out without one, this raises
+    instead of returning an unconverged iterate.  Duplicate (i, j)
+    entries of ``a`` sum, as in :func:`matmul`.  For ``spd``, the ‖A‖∞
+    probe and the FIRST residual probe are one n-row collect: the
+    residual of M₀ = A/‖A‖∞ is an exact per-row function of (row abs-sum,
+    max off-diagonal |a_ij|, a_ii), so the first chunk schedules without
+    its own probe job.
     """
     spark = a.sparkSession
     # A is referenced by the norm/dimension probes plus M₀ (and the
     # closing Aᵀ·Q matmul on the generic path): materialize it once or its
     # lineage — for a DSL input this is the whole corpus Gram pass —
-    # re-executes per reference (measured in round 8: the ×10 probe's 0.43
-    # exponent on la_dsl_inverse was ~11 corpus re-scans under the old
-    # per-sweep A·X form, not the scale-free sweeps).  A is always
-    # reduced-dim here (k×k — inverse of the data matrix itself is never
-    # the operation), so the checkpoint is model-sized; for an
-    # already-trivial input (identity) it costs one no-op job.
-    if not materialized:
-        a = a.transform(_barrier, eager=True)
+    # re-executes per reference.  The group-sum makes duplicate entries
+    # one entry before any probe reads them.
+    a = a.groupBy("i", "j").agg(F.sum("v").alias("v")).transform(_barrier, eager=True)
     if n is None:
         mx = a.agg(F.max("i").alias("mi"), F.max("j").alias("mj")).first()
         n = int(max(mx["mi"], mx["mj"])) + 1
-    # a reduced-dim iterate (n² COO rows ≲ 8 MB) runs the single-partition
-    # exchange-free loop; a distributed-scale matrix shuffles.
-    small = (n * n) <= (1 << 18)
-    if small:
-        # SinglePartition badge + truthful size estimate for every probe
-        # and for M₀'s lineage (the checkpointed LogicalRDD inherits the
-        # pre-checkpoint join-blowup estimate — see the stats-reset note
-        # below).  coalesce(1) on a reduced-dim frame is a narrow no-op.
-        a = a.coalesce(1).limit(n * n)
     norms = (
         a.select(
             F.col("i"), F.col("j"), F.abs(F.col("v")).alias("av")
@@ -300,9 +272,7 @@ def inverse_newton(
     # repartition (never the session-global spark.sql.shuffle.partitions,
     # which would leak into concurrently planned queries in a shared
     # driver — test-locked in tests/test_la.py).  The joins themselves are
-    # left to Catalyst: checkpointed iterates carry size stats, so
-    # reduced-dim matrices plan exchange-free broadcast joins while
-    # distributed-scale matrices shuffle at the session width.
+    # left to Catalyst.
     n_parts = max(2, min(32, (n * n) // 2048))
 
     def fused_step(mq: DataFrame, c: float) -> DataFrame:
@@ -312,24 +282,10 @@ def inverse_newton(
         #     M' = 2c·M − c²·M·M,   Q' = 2c·Q − c²·Q·M,
         # so one join of the whole pair frame against the M rows plus one
         # group-sum on (t, i, j) advances BOTH matrices — a single shuffle
-        # stage and a single broadcast build per step instead of two of
-        # each (the step cost on a reduced-dim matrix is stage/codegen
-        # overhead, not FLOPs — measured, not guessed).
+        # stage and a single join build per step instead of two of each.
         m_side = mq.filter(F.col("t") == 0).select(
             F.col("i").alias("k2"), F.col("j").alias("bj"), F.col("v").alias("bv")
         )
-        if small:
-            # hinted SHUFFLED-HASH join: both sides are SinglePartition
-            # (the pair frame is coalesce(1)+checkpointed, and checkpoint
-            # preserves output partitioning), which satisfies the join's
-            # clustered distribution — so the hint plans a hash join with
-            # NO exchange AND no broadcast-build job.  The earlier
-            # broadcast hint avoided the exchanges too but paid one
-            # detached build JOB per step (~0.3-0.5 s of pure job-launch
-            # overhead on a reduced-dim matrix); unhinted, Catalyst plans
-            # sort-merge with exchanges on both sides — measured ~35%
-            # slower end-to-end than either hint.
-            m_side = m_side.hint("shuffle_hash")
         prod_terms = (
             mq.select("t", F.col("i").alias("ai"), F.col("j").alias("k"), F.col("v").alias("av"))
             .join(m_side, F.col("k") == F.col("k2"))
@@ -337,33 +293,13 @@ def inverse_newton(
                     (-c * c * F.col("av") * F.col("bv")).alias("v"))
         )
         u = mq.withColumn("v", F.col("v") * (2.0 * c)).unionByName(prod_terms)
-        if small:
-            # single-partition frames satisfy any clustered distribution,
-            # so the group-sum plans NO exchange: every step of the chunk
-            # runs inside one narrow stage chain instead of paying a
-            # shuffle stage (plus an AQE re-plan) per step.  coalesce is
-            # itself narrow; reduced-dim means ≤ 2n² + n rows per task.
-            # The trailing limit (same 2n²+n algebraic row bound — a
-            # semantic no-op) clamps the step's SIZE ESTIMATE: join
-            # estimates multiply per step, and without the clamp the
-            # second step of a chunk is already past
-            # spark.sql.maxSinglePartitionBytes, which makes Spark 4.1's
-            # EnsureRequirements re-shuffle the SinglePartition inputs
-            # (measured: 2-step chunk plan 0 → 2 Exchanges, 11 by the
-            # next chunk, ~5 AQE construction jobs per lazy checkpoint).
-            return (
-                u.coalesce(1)
-                .groupBy("t", "i", "j")
-                .agg(F.sum("v").alias("v"))
-                .limit(2 * n * n + n)
-            )
         u = u.repartition(n_parts, "i", "j")
         return u.groupBy("t", "i", "j").agg(F.sum("v").alias("v"))
 
-    # CHUNKED, SCHEDULED, M-SPACE iteration (round-9: the two inverse
-    # queries' cost is job-COUNT-bound fixed overhead, not FLOPs — the
-    # per-step probe + checkpoint pair was 2 Spark actions × ~10 steps on
-    # a reduced-dim matrix).  Three structural moves:
+    # CHUNKED, SCHEDULED, M-SPACE iteration (round-9: the inverse's cost
+    # on a reduced-dim matrix is job-COUNT-bound fixed overhead, not
+    # FLOPs — the per-step probe + checkpoint pair was 2 Spark actions per
+    # step).  Three structural moves:
     #
     #   1. M-space recurrence: with P_k = 2c_kI − c_k²M_k, the next
     #      product is M_{k+1} = A·X_{k+1} = M_k·P_k and the iterate itself
@@ -387,10 +323,7 @@ def inverse_newton(
     #      matmul in the probe at all.
     #
     # Net: ONE action per `chunk` steps (the probe; checkpoints are lazy
-    # and materialize inside the next probe's job), with the probe itself
-    # join- and exchange-free.  Measured on la_inverse_identity's full
-    # 64×64 embedding-Gram query at sf0.1: 8.3 s → ~5.7 s steady-state
-    # (the remainder is the corpus Gram pass + irreducible job launch).
+    # and materialize inside the next probe's job).
     #
     # SCALED Newton–Schulz background (unchanged): under both inits A·X₀
     # is symmetric with real eigenvalues in (0, 1], and every Newton step
@@ -404,53 +337,29 @@ def inverse_newton(
     if spd:
         m0 = scale_mult(a, 1.0 / float(norm_inf))  # M₀ = A·(I/‖A‖∞)
     else:
-        m0 = matmul(
-            a, transpose(a), n_parts, hint_broadcast=small
-        ).withColumn("v", F.col("v") / (float(norm_1) * float(norm_inf)))
+        m0 = matmul(a, transpose(a), n_parts).withColumn(
+            "v", F.col("v") / (float(norm_1) * float(norm_inf))
+        )
     # the tagged pair frame: M rows under t = 0, Q rows (Q₀ = I) under
     # t = 1 — the uniform Q-recurrence Q₁ = 2cI − c²·I·M₀ = P₀ needs no
     # special casing when Q starts as explicit identity rows.
     mq = m0.select(F.lit(0).alias("t"), "i", "j", "v").unionByName(
         identity_coo(spark, n).select(F.lit(1).alias("t"), "i", "j", "v")
     )
-    # reduced-dim: land the pair frame on ONE partition up front so every
-    # fused_step group-sum is exchange-free (see fused_step).
     # LAZY checkpoint: the next probe's aggregation materializes it, so
-    # checkpointing costs no job of its own (same below, per chunk).
-    #
-    # STATS RESET (the `.limit` after each checkpoint): a localCheckpoint
-    # LogicalRDD inherits the PRE-checkpoint plan's size ESTIMATE — for a
-    # corpus-derived Gram that is the un-aggregated join-blowup figure
-    # (hundreds of GiB for a 4096-row frame).  Spark 4.1's
-    # EnsureRequirements re-shuffles any SinglePartition child whose
-    # estimated size exceeds spark.sql.maxSinglePartitionBytes (128 MB),
-    # so the garbage estimate silently defeats the whole exchange-free
-    # single-partition plan AND makes every lazy checkpoint pay its AQE
-    # stage jobs at CONSTRUCTION time (measured: la_inverse_identity 39
-    # construction jobs, 4.7 s).  limit(k) with k >= the frame's exact
-    # algebraic row bound (M and Q are each at most n² entries, plus the
-    # identity's n) is a semantic no-op that injects a truthful
-    # rowCount-based estimate while keeping the captured SinglePartition.
-    # The post-checkpoint coalesce(1) re-asserts SinglePartition: a
-    # checkpoint taken of any AQE-wrapped plan (anything with a join or
-    # aggregate gets wrapped, exchanges or not) captures
-    # UnknownPartitioning, which would force EnsureRequirements to
-    # shuffle the next chunk's single-partition joins.  Coalesce on a
-    # 1-partition RDD is a free narrow node that restores the badge.
-    mq = (mq.coalesce(1) if small else mq).transform(_barrier)
-    if small:
-        mq = mq.coalesce(1).limit(2 * n * n + n)
+    # checkpointing costs no job of its own (same below, per step).
+    mq = mq.transform(_barrier)
     stats["checkpoints"] += 1
     plain_applied = False  # did the last executed step use c == 1.0?
-    while stats["steps"] < iters:
+    while True:
         # probe: residual I − A·X_k is exactly I − M_k, and M_k sits in the
-        # already-checkpointed pair frame — ONE exchange-free aggregation
-        # (no identity join: diagonal entries contribute |v−1|, off-
-        # diagonals |v|, and any ABSENT diagonal entry means a residual of
-        # exactly 1, covered by the presence count).  The spd init's first
-        # residual was already computed on the driver from the norm
-        # collect (res0 — bit-identical arithmetic), so the first chunk
-        # schedules without a probe job.
+        # already-checkpointed pair frame — ONE aggregation (no identity
+        # join: diagonal entries contribute |v−1|, off-diagonals |v|, and
+        # any ABSENT diagonal entry means a residual of exactly 1, covered
+        # by the presence count).  The spd init's first residual was
+        # already computed on the driver from the norm collect (res0 —
+        # bit-identical arithmetic), so the first chunk schedules without
+        # a probe job.
         if res0 is not None:
             res, res0 = res0, None
         else:
@@ -472,11 +381,16 @@ def inverse_newton(
                 res = max(float(res), 1.0)
             stats["probes"] += 1
         converged = res is not None and float(res) < tol
-        if converged and plain_applied:
-            # the previous chunk already ended with the trailing plain
-            # (c = 1) update that drives the X·A-side residual — up to
-            # cond(A)× the A·X one for non-symmetric A — to res² ≪ tol.
+        # the trailing plain (c = 1) update drives the X·A-side residual —
+        # up to cond(A)× the A·X one for non-symmetric A — to res² ≪ tol;
+        # with the budget spent, the probed A·X residual has to do.
+        if converged and (plain_applied or stats["steps"] >= iters):
             break
+        if stats["steps"] >= iters:
+            raise RuntimeError(
+                f"inverse_newton did not converge: residual {res} >= tol "
+                f"{tol} after {iters} steps"
+            )
         if converged:
             # converged without a trailing plain step (e.g. X₀ was already
             # the inverse): apply one, exactly as the per-step form did.
@@ -499,24 +413,16 @@ def inverse_newton(
                 cs.append(2.0 / (2.0 - r_hat))
                 rho = r_hat / (2.0 - r_hat)
                 r_hat = rho * rho
-            if not cs:
-                break  # iteration budget exhausted
         # Lazy checkpoint after EVERY step, probe once per chunk: the
         # fused step references mq 3×, so an uncheckpointed chunk grows
         # 3^chunk subtree copies and per-probe wall is dominated by
-        # optimizer+codegen over that tree (measured with clean plans:
-        # 4.4 s at chunk 2, 60 s at chunk 6).  Per-step lazy checkpoints
-        # bound codegen depth at ONE step while the chunk still costs a
-        # single ACTION (the next probe materializes the whole pending
-        # RDD chain inside one job cascade): measured 4.4 → 2.9 s at
-        # chunk 2.  The coalesce(1)+limit after each checkpoint restores
-        # the SinglePartition badge (an AQE-wrapped plan's checkpoint
-        # captures UnknownPartitioning) and re-clamps the size estimate.
+        # optimizer+codegen over that tree (measured 4.4 s at chunk 2,
+        # 60 s at chunk 6).  Per-step lazy checkpoints bound codegen depth
+        # at ONE step while the chunk still costs a single ACTION (the
+        # next probe materializes the whole pending RDD chain inside one
+        # job cascade).
         for c in cs:
-            mq = fused_step(mq, c)
-            mq = mq.transform(_barrier)
-            if small:
-                mq = mq.coalesce(1).limit(2 * n * n + n)
+            mq = fused_step(mq, c).transform(_barrier)
         stats["steps"] += len(cs)
         stats["checkpoints"] += 1
         plain_applied = cs[-1] == 1.0
@@ -529,44 +435,37 @@ def inverse_newton(
     # generic init pays its one closing matmul with Aᵀ.
     if spd:
         return scale_mult(q, 1.0 / float(norm_inf))
-    return matmul(transpose(a), q, n_parts, hint_broadcast=small).withColumn(
+    return matmul(transpose(a), q, n_parts).withColumn(
         "v", F.col("v") / (float(norm_1) * float(norm_inf))
     )
-
-
-# k-by-k matrices at or under this dimension are inverted with the
-# reference's Eigen-style driver-dense gather; anything larger takes the
-# distributed Newton-Schulz path.  32x32 = 8 KB dense — unambiguously a
-# scalar-sized internal at any corpus scale.
-DENSE_INVERSE_MAX_DIM = 32
 
 
 def inverse_auto(
     a: DataFrame, n: int | None = None, spd: bool = False
 ) -> DataFrame:
     """Size-gated inverse dispatcher — the DSL ``inverse()`` keyword's
-    entry point (LAPostfixExpressionNode.h:30-32).  The reference always
-    gathers + Eigen-inverts; here only genuinely scalar-sized matrices
-    (n <= DENSE_INVERSE_MAX_DIM) do, and everything else runs the fully
-    distributed :func:`inverse_newton` iteration, so a ``.pdml`` script
-    inverting a corpus-derived Gram/covariance never plans a full
-    collect.  The dimension probe is a 1-row max aggregation.
-    ``spd`` is a caller-supplied structural guarantee (e.g. the DSL's
-    ``A '* A`` Gram provenance): it selects the cheaper symmetric Newton
-    init (no ‖A‖₁ probe, no M₀/closing matmuls, ~4 fewer steps) — the
-    result is still convergence-probed, never assumed."""
-    probed = False
+    entry point (LAPostfixExpressionNode.h:30-32).  At or under the driver
+    gate (n² ≤ ``core.DRIVER_LOOP_ROW_LIMIT`` entries) the matrix is
+    gathered and inverted on the driver with :func:`inverse`, as the
+    reference gathers and Eigen-inverts; anything larger runs the
+    partitioned :func:`inverse_newton` iteration, so a ``.pdml`` script
+    inverting a corpus-scale matrix never plans a full collect.  Without
+    ``n`` the dimension probe is a 1-row max aggregation.  Duplicate
+    (i, j) entries sum on both sides of the gate.  ``spd`` is a
+    caller-supplied structural guarantee (e.g. the DSL's ``A '* A`` Gram
+    provenance): it selects the cheaper symmetric Newton init (no ‖A‖₁
+    probe, no M₀/closing matmuls, ~4 fewer steps) — the result is still
+    convergence-probed, never assumed."""
     if n is None:
-        # materialize before probing: the probe job plus the dense gather
-        # or every Newton sweep would otherwise each re-execute the input's
-        # lineage (for a .pdml Gram, a full corpus pass per reference)
-        a = a.transform(_barrier, eager=True)
-        probed = True
+        # lazy barrier: the probe materializes it, so the gather or the
+        # Newton loop after it does not re-execute the input's lineage
+        # (for a .pdml Gram, a full corpus pass)
+        a = a.transform(_barrier)
         mx = a.agg(F.max("i").alias("mi"), F.max("j").alias("mj")).first()
         n = int(max(mx["mi"], mx["mj"])) + 1
-    if n <= DENSE_INVERSE_MAX_DIM:
+    if n * n <= core.DRIVER_LOOP_ROW_LIMIT:
         return inverse(a)
-    return inverse_newton(a, n=n, spd=spd, materialized=probed)
+    return inverse_newton(a, n=n, spd=spd)
 
 
 def duplicate_row(row_vec: DataFrame, n: int) -> DataFrame:
@@ -684,26 +583,19 @@ SELECT max(v) AS max_v, min(v) AS min_v FROM coo
 
 def la_inverse_identity(spark, sf_dir):
     """inverse(G) %*% G for the 64×64 Gram matrix — should be ≈ I —
-    computed through the fully DISTRIBUTED :func:`inverse_newton` path
-    (nothing gathered to the driver; the dense :func:`inverse` helper
-    remains only for k×k internals elsewhere).
+    computed through :func:`inverse_auto`: the Gram is under the driver
+    gate, so it is gathered and inverted on the driver as the reference
+    does with Eigen; a matrix above the gate runs the partitioned
+    :func:`inverse_newton`.
 
     Tolerance-oracle: the result is rounded at 1e-6 and filtered to its
     nonzero entries, so a numerically-correct inverse yields EXACTLY the 64
     unit diagonal entries — which DuckDB can predict without being able to
     invert (LA_INVERSE_IDENTITY_SQL generates literal I).  Any off-diagonal
     residual above 5e-7, or diagonal drift, breaks the hash match."""
-    g = gram(coo_from_embeddings(spark, sf_dir, limit=200)).transform(_barrier, eager=True)
-    # the closing product runs on the single-partition pattern too: both
-    # sides are one stats-clamped partition (the inverse comes out of the
-    # clamped pair frame; gi re-badges the checkpointed Gram), so the
-    # hinted hash join and the (i, j) group-sum plan zero exchanges and
-    # no broadcast-build job.
-    gi = g.coalesce(1).limit(64 * 64)
-    prod = matmul(
-        inverse_newton(g, n=64, spd=True, materialized=True), gi,
-        hint_shuffle_hash=True,
-    )
+    # lazy barrier: the inverse's gather materializes G for the product
+    g = gram(coo_from_embeddings(spark, sf_dir, limit=200)).transform(_barrier)
+    prod = matmul(inverse_auto(g, n=64, spd=True), g)
     # round so the result is stable: exact zeros off-diagonal modulo 1e-6
     return prod.select(
         "i", "j", F.round(F.col("v"), 6).alias("v")
@@ -744,17 +636,18 @@ ORACLE = {
 
 # ---------------------------------------------------------------------------
 # Power iteration for the dominant eigenpair of the covariance G = A'A —
-# the distributed top-PC computation (the first step of PCA / spectral
-# embedding).  Two-phase, matched to the d=64 embedding width:
+# the top-PC computation (the first step of PCA / spectral embedding).
+# Two-phase, matched to the d=64 embedding width:
 #
 #   1. ONE corpus pass builds G (the same co-keyed join+agg as ``la_gram``:
 #      shuffle on the row id, map-side combined) — d×d = 4096 values.
-#   2. POWER_ITERS normalized steps v ← G·v / ‖G·v‖ run on the d²-sized
-#      frame: broadcast joins + 64-row aggregates, zero further corpus
-#      reads.  (When d² itself is too large to materialize, the two-matvec
-#      form A'(A·v) per step avoids G at the cost of 2 corpus joins per
-#      iteration — with d = 64 the Gram route is strictly better: one
-#      corpus pass total instead of 2K.)
+#   2. POWER_ITERS normalized steps v ← G·v / ‖G·v‖ on G alone, zero
+#      further corpus reads: in numpy on the driver when G's d² entries
+#      fit the driver gate, else as broadcast joins + d-row aggregates on
+#      the d²-sized frame.  (When d² itself is too large to materialize,
+#      the two-matvec form A'(A·v) per step avoids G at the cost of 2
+#      corpus joins per iteration — with d = 64 the Gram route is strictly
+#      better: one corpus pass total instead of 2K.)
 #
 # Iteration count is FIXED so the oracle can unroll the identical
 # arithmetic; both engines compute the same K-step iterate, making the
@@ -765,98 +658,64 @@ ORACLE = {
 POWER_ITERS = 8
 
 
-def la_power_iteration(spark, sf_dir):
-    import math
-
-    from pyspark.sql.window import Window
-
-    a = coo_from_embeddings(spark, sf_dir)
-    g = gram(a).transform(_barrier, eager=True)  # d×d; ONE corpus pass
+def dominant_eigenpair(g: DataFrame) -> DataFrame:
+    """POWER_ITERS normalized power-iteration steps on the square COO
+    matrix ``g`` from the constant unit vector, then the Rayleigh quotient
+    v'Gv: rows (j int, x, eigval), rounded to 1e-6 and ordered by j.  At or
+    under the driver gate (d² ≤ ``core.DRIVER_LOOP_ROW_LIMIT``) ``g`` is
+    collected once and the steps run in numpy; above it every step is a
+    broadcast join + aggregate with an eager checkpoint of the d-row
+    iterate."""
+    spark = g.sparkSession
+    g = g.transform(_barrier)  # lazy: the dimension probe materializes it
     d = int(g.agg(F.max("j")).collect()[0][0]) + 1  # 1-value bounded collect
-    # The iterate v is d rows and G is d² — scalar-sized whenever d² fits a
-    # single task (d is the embedding WIDTH, corpus-size-independent).  On
-    # the small path both frames land on ONE lazily-checkpointed partition
-    # (hinted ShuffledHashJoin — no broadcast-BUILD job per step), the
-    # per-step normalization rides a whole-frame window on the already-
-    # single partition (no separate norm aggregate, no cross join), and
-    # the loop runs fully LAZILY — per-step lazy localCheckpoints bound
-    # the plan, and the caller's one action materializes the whole K-step
-    # cascade as one job chain.  The old per-step form paid 5 jobs/step
-    # (broadcast build + AQE stages + eager checkpoint): 53 jobs total
-    # for 64-row per-step data; this form runs the same arithmetic in ~6.
-    # A larger d keeps the session-width broadcast-join path below.
-    # v's key is created as INT to match the Gram's posexplode index type:
-    # join keys stay cast-free and the output schema is unchanged.
-    small = (d * d) <= (1 << 18)
-    if small:
-        # range-based init (v is a constant vector): precise tiny stats,
-        # already effectively single-partition after coalesce.
-        v = spark.range(d).select(
-            F.col("id").cast("int").alias("j"),
-            F.lit(1.0 / math.sqrt(d)).alias("x"),
-        ).coalesce(1).transform(_barrier)
-        # STATS RESET (see inverse_newton): the checkpointed Gram inherits
-        # the corpus join-blowup size estimate, and Spark 4.1's
-        # EnsureRequirements re-shuffles SinglePartition children it
-        # believes exceed spark.sql.maxSinglePartitionBytes — limit(d²)
-        # (the Gram's exact dense cardinality) is a semantic no-op that
-        # restores a truthful estimate and keeps the loop exchange-free.
-        gj = g.coalesce(1).transform(_barrier).limit(d * d)
+    if d * d <= core.DRIVER_LOOP_ROW_LIMIT:
+        m = _dense(g)
+        x = np.full(d, 1.0 / math.sqrt(d))
+        for _ in range(POWER_ITERS):
+            x = m @ x
+            x /= np.linalg.norm(x)
+        out = core.driver_frame(
+            spark, j=np.arange(d), x=x, eigval=np.full(d, x @ m @ x)
+        ).withColumn("j", F.col("j").cast("int"))
     else:
-        gj = g
+        # v's key is INT to match the Gram's posexplode index type: join
+        # keys stay cast-free and the output schema is unchanged.
         v = spark.createDataFrame(
             [(j, 1.0 / math.sqrt(d)) for j in range(d)], "j int, x double"
         )
-    w_all = Window.partitionBy()
-    for _ in range(POWER_ITERS):
-        gv = (
-            gj.join(v.hint("shuffle_hash") if small else F.broadcast(v), "j")
-            .groupBy("i")
-            .agg(F.sum(F.col("v") * F.col("x")).alias("x"))
-        )
-        if small:
-            # lazy ckpt: no per-step action; limit(d) = the iterate's
-            # exact cardinality, re-applying the stats reset per step.
-            # post-ckpt coalesce(1): the ckpt of this (AQE-wrapped — it
-            # holds a join+agg+window) plan captures UnknownPartitioning;
-            # the free narrow coalesce restores the SinglePartition badge
-            # so the next iteration keeps planning exchange-free.
-            v = gv.select(
-                F.col("i").alias("j"),
-                (F.col("x") / F.sqrt(F.sum(F.col("x") * F.col("x")).over(w_all)))
-                .alias("x"),
-            ).transform(_barrier).coalesce(1).limit(d)
-        else:
+
+        def g_times(v: DataFrame) -> DataFrame:
+            return (
+                g.join(F.broadcast(v), "j")
+                .groupBy("i")
+                .agg(F.sum(F.col("v") * F.col("x")).alias("x"))
+            )
+
+        for _ in range(POWER_ITERS):
+            gv = g_times(v)
             nrm = gv.agg(F.sqrt(F.sum(F.col("x") * F.col("x"))).alias("nrm"))
             v = (
                 gv.join(F.broadcast(nrm))
                 .select(F.col("i").alias("j"), (F.col("x") / F.col("nrm")).alias("x"))
                 .transform(_barrier, eager=True)
             )
-    gv = (
-        gj.join(v.hint("shuffle_hash") if small else F.broadcast(v), "j")
-        .groupBy("i")
-        .agg(F.sum(F.col("v") * F.col("x")).alias("x"))
-    )
-    # v normalized → Rayleigh quotient v'Gv is the eigenvalue estimate.
-    # One equi-join attaches v to G·v; the quotient is a whole-frame window
-    # sum over the joined rows — same products, no second join/cross join.
-    vr = v.select(F.col("j").alias("vj"), F.col("x").alias("vx"))
-    if small:
-        joined = gv.join(vr.hint("shuffle_hash"), gv.i == vr.vj)
-        return joined.select(
-            F.col("vj").alias("j"),
-            F.round("vx", 6).alias("x"),
-            F.round(F.sum(F.col("x") * F.col("vx")).over(w_all), 6).alias("eigval"),
-        ).orderBy("j")
-    lam = gv.join(F.broadcast(vr), gv.i == vr.vj).agg(
-        F.sum(F.col("x") * F.col("vx")).alias("eigval")
-    )
-    return (
-        v.join(F.broadcast(lam))
-        .select("j", F.round("x", 6).alias("x"), F.round("eigval", 6).alias("eigval"))
-        .orderBy("j")
-    )
+        # v normalized → Rayleigh quotient v'Gv is the eigenvalue estimate
+        gv = g_times(v)
+        vr = v.select(F.col("j").alias("vj"), F.col("x").alias("vx"))
+        lam = gv.join(F.broadcast(vr), gv.i == vr.vj).agg(
+            F.sum(F.col("x") * F.col("vx")).alias("eigval")
+        )
+        out = v.join(F.broadcast(lam))
+    return out.select(
+        "j", F.round("x", 6).alias("x"), F.round("eigval", 6).alias("eigval")
+    ).orderBy("j")
+
+
+def la_power_iteration(spark, sf_dir):
+    """Dominant eigenpair of the embedding Gram (d = 64): one corpus pass
+    builds G, then :func:`dominant_eigenpair`."""
+    return dominant_eigenpair(gram(coo_from_embeddings(spark, sf_dir)))
 
 
 def _power_iteration_sql(iters: int = POWER_ITERS) -> str:

@@ -17,7 +17,7 @@ algebra over COO DataFrames (lachesis_spark.plans.la).  Statements::
     R = rowSum(C)                # rowMax/rowMin/colMax/colMin/colSum likewise
     M = maxElement(A)            # minElement likewise
     G = duplicateRow(R, 10)      # duplicateCol likewise
-    I = inverse(C)               # size-gated: dense k-by-k, Newton-Schulz above
+    I = inverse(C)               # size-gated: driver-dense, Newton-Schulz above
 
 ``run(spark, sf_dir, script)`` returns the DataFrame bound by the last
 statement.  Same operator set as the reference's grammar; everything lowers
@@ -298,19 +298,18 @@ SELECT i, sum(v) AS v FROM scaled GROUP BY i
 """
 
 # ---------------------------------------------------------------------------
-# Registry query: inverse() THROUGH THE DSL TEXT FRONT-END.  The 64x64
-# Gram sits above DENSE_INVERSE_MAX_DIM, so the keyword dispatches to the
-# fully distributed Newton-Schulz path (la.inverse_auto) — a user writing
-# .pdml gets the same 100 TB-safe plan as the registry's
-# la_inverse_identity (test-locked: the driver-dense helper is
-# monkeypatch-poisoned in tests/test_la.py::test_dsl_inverse_dispatch).
-# Tolerance-oracle as
+# Registry query: inverse() THROUGH THE DSL TEXT FRONT-END.  The keyword
+# dispatches through la.inverse_auto: the 64x64 Gram is under the driver
+# gate, so it is gathered and inverted on the driver as in
+# la_inverse_identity, and a larger matrix runs the partitioned
+# Newton-Schulz path (both dispatches test-locked in
+# tests/test_la.py::test_dsl_inverse_dispatch).  Tolerance-oracle as
 # there: round(1e-6) + filter-nonzero turns inverse(G) %*% G into literal
 # I, which DuckDB can predict without inverting anything.
 _SCRIPT_INV = """
 A = load(embeddings)        # n x 64
 G = A '* A                  # Gram: 64 x 64
-P = inverse(G) %*% G        # ~= I, via the distributed inverse
+P = inverse(G) %*% G        # ~= I, via the size-gated inverse
 """
 
 

@@ -77,8 +77,9 @@ _PRIORITY = [
     # Round 9 rotated la_dsl_gram_rowsum out (la_gram keeps the Gram plan
     # seat and the DSL front-end stays gate-exercised by la_dsl_inverse;
     # the gram_rowsum script stays oracle-checked in the strict sweep) to
-    # seat la_dsl_inverse — the distributed size-gated inverse() THROUGH
-    # the .pdml text front-end, the round-7/8 fidelity fix.
+    # seat la_dsl_inverse — the size-gated inverse() (driver-dense under
+    # the driver gate, Newton-Schulz above) THROUGH the .pdml text
+    # front-end, the round-7/8 fidelity fix.
     "la_gram", "stats_corr_matrix", "la_dsl_inverse",
     # LLM-corpus engine additions (round 4 added the training-corpus ops,
     # displacing la_matmul (la_gram covers the matmul plan shape) and

@@ -100,3 +100,21 @@ def test_barrier_cluster_branch_picks_replicated_or_disk(spark, monkeypatch):
     from pyspark import StorageLevel
 
     assert used["disk"] == StorageLevel.DISK_ONLY and "local" not in used
+
+
+def test_barrier_disk_mode_warns_once(spark, monkeypatch):
+    """Disk mode keeps lineage, so loop plans grow without bound: the
+    first disk-mode barrier of the process warns, later ones stay quiet."""
+    import warnings
+
+    df = spark.range(4)
+    monkeypatch.setattr(type(df), "persist", lambda self, level: self)
+    monkeypatch.setattr(core, "barrier_mode", lambda s: "disk")
+    monkeypatch.setattr(core, "_disk_warned", False)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        core.barrier(df)
+        core.barrier(df)
+    lineage = [w for w in caught if "keep lineage" in str(w.message)]
+    assert len(lineage) == 1, [str(w.message) for w in caught]
+    assert issubclass(lineage[0].category, RuntimeWarning)

@@ -129,7 +129,7 @@ def test_cc_converged_shuffle_and_broadcast_paths_agree(spark, monkeypatch):
     gate is zeroed too, so both runs take a Spark loop."""
     from lachesis_spark.operators import core
 
-    monkeypatch.setattr(core, "DRIVER_LOOP_EDGE_LIMIT", 0)
+    monkeypatch.setattr(core, "DRIVER_LOOP_ROW_LIMIT", 0)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21), (4, 10)],
         "a_id bigint, b_id bigint",

@@ -1,13 +1,16 @@
-"""Driver regime of the small-input graph loops (CC, k-core, BFS, LPA).
+"""Driver regime of the small-input loops: the graph loops (CC, k-core,
+BFS, LPA) and the LA loops (inverse, power iteration).
 
-Below ``core.DRIVER_LOOP_EDGE_LIMIT`` each loop collects its edge list and
-iterates in numpy on the driver.  The kernels must return exactly the rows
-the partitioned Spark loops return; the Spark side is forced by zeroing
+Below ``core.DRIVER_LOOP_ROW_LIMIT`` each loop collects its edge list or
+matrix and iterates in numpy on the driver.  The kernels must return the
+rows the partitioned Spark loops return (exactly for the integer graph
+results, to rounding for the LA ones); the Spark side is forced by zeroing
 the gate, the same way the CC tests force the shuffle regime.  Example
 counts stay low because every Spark-side example is a multi-job loop."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
@@ -15,6 +18,8 @@ from hypothesis import strategies as st
 from lachesis_spark.llm import dedup as D
 from lachesis_spark.operators import core
 from lachesis_spark.plans import graph_algos as G
+from lachesis_spark.plans import la, la_dsl
+from tests.conftest import SF_SMOKE
 
 SET = settings(
     max_examples=4,
@@ -46,7 +51,7 @@ def _both_regimes(monkeypatch, run):
     """Rows from the driver kernel and from the Spark loop (gate zeroed)."""
     driver = sorted(tuple(r) for r in run().collect())
     with monkeypatch.context() as mp:
-        mp.setattr(core, "DRIVER_LOOP_EDGE_LIMIT", 0)
+        mp.setattr(core, "DRIVER_LOOP_ROW_LIMIT", 0)
         spark_side = sorted(tuple(r) for r in run().collect())
     return driver, spark_side
 
@@ -107,25 +112,32 @@ def test_cc_driver_raises_when_sweeps_run_out(spark):
         D.cc_converged(pairs, max_sweeps=1)
 
 
+def _jobs_in_group(spark, group, run):
+    """``run()``'s result and the number of Spark jobs it launched, counted
+    through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_cc_below_gate_runs_fixed_job_count(spark):
     """Below the gate the job count does not grow with chain depth: the
     per-sweep Spark loop would add a probe job every two sweeps."""
-    sc = spark.sparkContext
     jobs = {}
     for n in (20, 200):
-        group = f"cc-driver-regime-{n}"
-        sc.setJobGroup(group, group)
-        try:
-            pairs = spark.createDataFrame(
-                [(i, i + 1) for i in range(n - 1)], "a_id long, b_id long"
-            )
-            labels = {r["canonical_id"] for r in D.cc_converged(pairs).collect()}
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        assert labels == {0}
-        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "a_id long, b_id long"
+        )
+        rows, jobs[n] = _jobs_in_group(
+            spark, f"cc-driver-regime-{n}", lambda: D.cc_converged(pairs).collect()
+        )
+        assert {r["canonical_id"] for r in rows} == {0}
     assert jobs[20] == jobs[200] <= 8, jobs
 
 
@@ -141,3 +153,78 @@ def test_driver_frame_aggregates_plan_no_exchange(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan, plan
+
+
+def _seeded_matrices():
+    """(name, matrix, spd): well-conditioned SPD and non-symmetric ones."""
+    out = []
+    for seed, n in ((1, 6), (2, 12)):
+        rng = np.random.RandomState(seed)
+        b = rng.uniform(-1.0, 1.0, (n, n))
+        out.append((f"spd{n}", b @ b.T + n * np.eye(n), True))
+        out.append((f"nonsym{n}", b + n * np.eye(n), False))
+    return out
+
+
+MATRICES = _seeded_matrices()
+MATRIX_IDS = [name for name, _, _ in MATRICES]
+
+
+def _coo(spark, m):
+    n = m.shape[0]
+    return spark.createDataFrame(
+        [(i, j, float(m[i, j])) for i in range(n) for j in range(n)],
+        "i int, j int, v double",
+    )
+
+
+@pytest.mark.parametrize("name,m,spd", MATRICES, ids=MATRIX_IDS)
+def test_inverse_driver_matches_spark(spark, monkeypatch, name, m, spd):
+    n = m.shape[0]
+
+    def dense():
+        out = np.zeros((n, n))
+        for r in la.inverse_auto(_coo(spark, m), spd=spd).collect():
+            out[int(r["i"]), int(r["j"])] = r["v"]
+        return out
+
+    driver = dense()
+    with monkeypatch.context() as mp:
+        mp.setattr(core, "DRIVER_LOOP_ROW_LIMIT", 0)
+        spark_side = dense()
+    assert np.abs(driver - np.linalg.inv(m)).max() < 1e-12, name
+    assert np.abs(driver - spark_side).max() < 1e-9, name
+
+
+@pytest.mark.parametrize("name,m,spd", MATRICES, ids=MATRIX_IDS)
+def test_power_iteration_driver_matches_spark(spark, monkeypatch, name, m, spd):
+    driver, spark_side = _both_regimes(
+        monkeypatch, lambda: la.dominant_eigenpair(_coo(spark, m))
+    )
+    assert [r[0] for r in driver] == [r[0] for r in spark_side] == list(range(len(m)))
+    # both sides round to 1e-6, so a last-bit difference can flip one unit
+    diff = np.abs(np.array(driver)[:, 1:] - np.array(spark_side)[:, 1:]).max()
+    assert diff <= 1.01e-6, name
+
+
+def test_power_iteration_job_count_does_not_grow_with_steps(spark, monkeypatch):
+    """Below the gate the steps run in numpy: 16 steps launch exactly the
+    jobs 8 steps do, where the Spark loop checkpoints every step."""
+    jobs = {}
+    for iters in (8, 16):
+        monkeypatch.setattr(la, "POWER_ITERS", iters)
+        rows, jobs[iters] = _jobs_in_group(
+            spark, f"power-driver-regime-{iters}",
+            lambda: la.la_power_iteration(spark, SF_SMOKE).collect(),
+        )
+        assert len(rows) == 64
+    assert jobs[8] == jobs[16], jobs
+
+
+@pytest.mark.parametrize("query,schema", [
+    (la.la_inverse_identity, "struct<i:bigint,j:int,v:double>"),
+    (la_dsl.la_dsl_inverse, "struct<i:bigint,j:int,v:double>"),
+    (la.la_power_iteration, "struct<j:int,x:double,eigval:double>"),
+], ids=["la_inverse_identity", "la_dsl_inverse", "la_power_iteration"])
+def test_la_queries_keep_output_schema(spark, query, schema):
+    assert query(spark, SF_SMOKE).schema.simpleString() == schema

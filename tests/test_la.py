@@ -6,6 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from lachesis_spark.operators import core
 from lachesis_spark.plans import la, la_dsl
 from tests.conftest import SF_SMOKE, canon
 
@@ -38,36 +39,33 @@ def test_dsl_identity_matmul(spark):
 
 
 def test_dsl_inverse_dispatch(spark, monkeypatch):
-    """The DSL inverse() keyword is size-gated: above DENSE_INVERSE_MAX_DIM
-    it must run the distributed Newton-Schulz path and NEVER the
-    driver-dense gather (poisoned here); at or below the gate the dense
-    helper is the reference-faithful choice and must be taken."""
-    # 64x64 Gram > gate: poison the dense helper — must not be called
-    monkeypatch.setattr(
-        la, "inverse",
-        lambda *_a, **_k: (_ for _ in ()).throw(
-            AssertionError("driver-dense inverse used above the size gate")),
-    )
-    out = la_dsl.run(
-        spark, SF_SMOKE,
-        "A = load(embeddings)\nG = A '* A\nP = inverse(G) %*% G\n",
-    )
-    rows = out.select(
-        "i", "j", F.round(F.col("v"), 6).alias("v")
-    ).filter(F.col("v") != 0.0).collect()
-    assert len(rows) == 64
-    assert all(r["i"] == r["j"] and abs(r["v"] - 1.0) < 1e-5 for r in rows)
-    # small identity <= gate: the dense path must be taken (monkeypatch a
-    # marker instead of the poison)
-    called = {}
+    """The DSL inverse() keyword is size-gated on the driver gate: the
+    64x64 Gram (4096 entries) is under it, so the driver-dense kernel runs
+    and the partitioned Newton-Schulz path must not (poisoned here); with
+    the gate at 0 Newton runs and the dense kernel is poisoned."""
+    script = "A = load(embeddings)\nG = A '* A\nP = inverse(G) %*% G\n"
 
-    def marker(a, *_a, **_k):
-        called["dense"] = True
-        return a  # identity is its own inverse
+    def poisoned(name):
+        def fail(*_a, **_k):
+            raise AssertionError(f"{name} used on the wrong side of the gate")
 
-    monkeypatch.setattr(la, "inverse", marker)
-    small = la_dsl.run(spark, SF_SMOKE, "I = identity(8)\nJ = inverse(I)\n")
-    assert small.count() == 8 and called.get("dense")
+        return fail
+
+    def assert_identity():
+        out = la_dsl.run(spark, SF_SMOKE, script)
+        rows = out.select(
+            "i", "j", F.round(F.col("v"), 6).alias("v")
+        ).filter(F.col("v") != 0.0).collect()
+        assert len(rows) == 64
+        assert all(r["i"] == r["j"] and abs(r["v"] - 1.0) < 1e-5 for r in rows)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(la, "inverse_newton", poisoned("inverse_newton"))
+        assert_identity()
+    with monkeypatch.context() as mp:
+        mp.setattr(core, "DRIVER_LOOP_ROW_LIMIT", 0)
+        mp.setattr(la, "inverse", poisoned("inverse"))
+        assert_identity()
 
 
 def test_dsl_errors(spark):
@@ -174,6 +172,51 @@ def test_inverse_newton_early_termination_on_convergence(spark):
     assert st["checkpoints"] <= chunks + 2, st
 
 
+def _coo(spark, m, rows=None):
+    n = m.shape[0]
+    rows = rows or [(i, j, float(m[i, j])) for i in range(n) for j in range(n)]
+    return spark.createDataFrame(rows, "i bigint, j bigint, v double")
+
+
+def _dense(df, n):
+    import numpy as np
+
+    out = np.zeros((n, n))
+    for r in df.collect():
+        out[int(r["i"]), int(r["j"])] = r["v"]
+    return out
+
+
+def test_inverse_newton_raises_when_steps_run_out(spark):
+    """One Newton step cannot bring a 16x16 residual under tol: the loop
+    must fail loudly instead of returning the unconverged iterate."""
+    import numpy as np
+
+    rng = np.random.RandomState(5)
+    n = 16
+    m = rng.uniform(-1.0, 1.0, (n, n)) + n * np.eye(n)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        la.inverse_newton(_coo(spark, m), n=n, iters=1)
+
+
+def test_inverse_auto_sums_duplicate_entries(spark, monkeypatch):
+    """Every entry of an 8x8 matrix arrives as two half-valued COO rows;
+    both sides of the gate must invert the summed matrix."""
+    import numpy as np
+
+    rng = np.random.RandomState(13)
+    n = 8
+    m = rng.uniform(-1.0, 1.0, (n, n)) + n * np.eye(n)
+    halves = [
+        (i, j, float(m[i, j]) / 2) for i in range(n) for j in range(n)
+    ] * 2
+    expect = np.linalg.inv(m)
+    for gate in (core.DRIVER_LOOP_ROW_LIMIT, 0):
+        monkeypatch.setattr(core, "DRIVER_LOOP_ROW_LIMIT", gate)
+        got = _dense(la.inverse_auto(_coo(spark, m, halves)), n)
+        assert np.abs(got - expect).max() < 1e-9, gate
+
+
 def test_inverse_newton_action_budget_on_gram(spark):
     """The 64×64 embedding-Gram shape (what la_inverse_identity and
     la_dsl_inverse run): the scheduler must converge in a bounded number
@@ -189,7 +232,7 @@ def test_inverse_newton_action_budget_on_gram(spark):
     x = la.inverse_newton(g, n=64, spd=True)
     st = dict(la.LAST_INVERSE_STATS)
     # X·G ≈ I to the query's rounding tolerance
-    prod = la.matmul(x, g, n_parts=2, hint_broadcast=True)
+    prod = la.matmul(x, g, n_parts=2)
     import pyspark.sql.functions as F
 
     nz = prod.select(F.round(F.col("v"), 6).alias("v")).filter(

@@ -1,9 +1,12 @@
-"""Per-query Spark JOB COUNT (DAGScheduler.nextJobId delta) + wall time.
+"""Per-query Spark JOB and STAGE counts + wall time.
 
 Host-noise-immune structural metric used throughout OPTIMIZATION_r11.md:
-run-to-run wall scatter on this sandbox is 2-3x, but the number of jobs a
-query launches is a property of the code, so before/after job counts are
-the evidence wall-clock cannot fake.  Usage:
+run-to-run wall scatter on a shared host is 2-3x, but the number of jobs and
+stages a query launches is a property of the code, so before/after counts
+are the evidence wall-clock cannot fake.  Jobs are the
+DAGScheduler.nextJobId delta; stages are the stages that ran (completed or
+failed, not skipped) in the query's jobs, read from the status store
+through a per-query job group.  Usage:
 
     python tools/job_count_probe.py [sf_dir] q1 q2 ...
 """
@@ -27,18 +30,33 @@ def main() -> None:
     names = [a for a in args if not os.path.isdir(a)]
     spark = get_spark("job_count_probe")
     sc = spark.sparkContext
+    jsc = sc._jsc.sc()
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
 
     def jobs() -> int:
-        return int(sc._jsc.sc().dagScheduler().nextJobId())
+        return int(jsc.dagScheduler().nextJobId())
 
-    for name in names:
-        sc.setJobDescription(f"probe:{name}")
+    def stages(group: str) -> int:
+        jsc.listenerBus().waitUntilEmpty(10_000)
+        store = jsc.statusStore()
+        ran = 0
+        for job_id in sc.statusTracker().getJobIdsForGroup(group):
+            job = store.job(job_id)
+            ran += job.numCompletedStages() + job.numFailedStages()
+        return ran
+
+    for k, name in enumerate(names):
+        group = f"probe:{k}:{name}"
+        sc.setJobGroup(group, group)
         j0 = jobs()
         t0 = time.perf_counter()
         QUERIES[name](spark, sf_dir).count()
         sec = time.perf_counter() - t0
-        print(f"{name}: jobs={jobs() - j0} wall={sec:.2f}s", flush=True)
+        n_jobs = jobs() - j0
+        print(
+            f"{name}: jobs={n_jobs} stages={stages(group)} wall={sec:.2f}s",
+            flush=True,
+        )
         spark.catalog.clearCache()
         for jrdd in sc._jsc.getPersistentRDDs().values():
             jrdd.unpersist()
