@@ -10,14 +10,16 @@ an empty HistoryDB to a re-placed catalog with no manual steps:
     # are in each set's _lachesis_hints.json sidecar, and hinted_join()
     # picks them up at query time.
 
-Layout rewrites go through a temp set + directory swap so the source files
-are never overwritten while being read (Spark refuses in-place overwrite of
-a path it scans; the swap also keeps the old layout intact until the new
-one is fully written — crash-safe in the same way compact_set's tmp-rename
-is).  Salting is a QUERY-TIME decision, not a storage layout, so "applying"
-it means persisting the recommendation next to the data where
-:func:`hinted_join` (and any other consumer) finds it — the exact analog of
-the reference distributing its learned partition lambda with the set.
+Layout rewrites go through :meth:`Catalog.relayout_set`: a staged set +
+directory swap, so the source files are never overwritten while being read
+(Spark refuses in-place overwrite of a path it scans), the old layout stays
+intact until the new one is fully written, and a failed swap leaves the old
+set in place — the same crash-safe swap every catalog rewrite uses.
+Salting is a QUERY-TIME decision, not a storage layout, so "applying" it
+means persisting the recommendation next to the data, where it survives
+merges, CDC applies, compactions and relayouts, and where
+:func:`hinted_join` (and any other consumer) finds it — the exact analog
+of the reference distributing its learned partition lambda with the set.
 
 Measured end-to-end in tools/advisor_closed_loop.py → ADVISOR_DEMO.md.
 """
@@ -26,7 +28,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -35,8 +36,7 @@ from lachesis_spark.advisor.recommender import (
     PlacementReport,
     SaltingRecommendation,
 )
-
-HINTS_FILE = "_lachesis_hints.json"
+from lachesis_spark.catalog import HINTS_FILE
 
 
 @dataclass(frozen=True)
@@ -55,28 +55,26 @@ def rewrite_layout(
     cat, db: str, name: str, kind: str, key_cols, n_buckets: int = 32,
     range_cols=(),
 ):
-    """Rewrite ``db.name`` under the recommended layout via temp-set +
-    directory swap (never overwriting files being read), then re-register
-    the layout table from the durable sidecar so bucket-key joins plan
+    """Rewrite ``db.name`` under the recommended layout: this picks the
+    :meth:`Catalog.write_set` layout arguments for ``kind``, and
+    :meth:`Catalog.relayout_set` does the staged write, the directory swap
+    and the layout-table re-registration, so bucket-key joins plan
     exchange-free immediately."""
-    from lachesis_spark.catalog import ensure_layout_table
-
     if kind == "keep_flat":
         return  # the measured no-op arm: the existing layout IS the choice
-    tmp = f"{name}__relayout"
     df = cat.read_set(db, name)
     if kind == "bucket_by":
-        cat.write_set(df, db, tmp, bucket_by=(n_buckets, list(key_cols)))
+        cat.relayout_set(df, db, name, bucket_by=(n_buckets, list(key_cols)))
     elif kind == "bucket_range_grid":
         # hybrid: each range-slice task writes one file per bucket it
         # holds, so files are (filter-range × join-bucket) cells — the
         # zonemap prunes them in the filter dimension, the bucket spec
         # keeps the join exchange-free (multi-file buckets re-sort at
         # read; the measured arbitration decided that trade was worth it)
-        cat.write_set(
+        cat.relayout_set(
             df.repartitionByRange(N_GRID_RANGES, *range_cols),
             db,
-            tmp,
+            name,
             bucket_by=(n_buckets, list(key_cols)),
             zonemap_by=list(range_cols),
             bucket_pre_partitioned=True,
@@ -84,39 +82,18 @@ def rewrite_layout(
     elif kind == "zorder":
         # a z-ordered set gets zone maps on its z-columns for free: the
         # clustering is exactly what makes per-file ranges prunable
-        cat.write_set(
-            df, db, tmp, zorder_by=list(key_cols), zonemap_by=list(key_cols)
+        cat.relayout_set(
+            df, db, name, zorder_by=list(key_cols), zonemap_by=list(key_cols)
         )
     elif kind == "range_zonemap":
-        cat.write_set(
+        cat.relayout_set(
             df.repartitionByRange(n_buckets, *key_cols),
             db,
-            tmp,
+            name,
             zonemap_by=list(key_cols),
         )
     else:
         raise ValueError(f"unknown layout kind {kind!r}")
-    hints = read_hints(cat, db, name)  # survive the swap
-    old_path, new_path = cat.set_path(db, name), cat.set_path(db, tmp)
-    # capture the freshly written sidecars BEFORE dropping the tmp table —
-    # _drop_owned_table deliberately removes them with the table (any
-    # other caller is a rewrite that stales them)
-    sidecars: dict[str, str] = {}
-    for fname in ("_lachesis_layout.json", "_lachesis_zonemap.json"):
-        p = os.path.join(new_path, fname)
-        if os.path.exists(p):
-            with open(p) as fh:
-                sidecars[fname] = fh.read()
-    cat._drop_owned_table(db, name)
-    cat._drop_owned_table(db, tmp)
-    shutil.rmtree(old_path)
-    os.rename(new_path, old_path)
-    for fname, content in sidecars.items():
-        with open(os.path.join(old_path, fname), "w") as fh:
-            fh.write(content)
-    if hints:
-        write_hints(cat, db, name, hints)
-    ensure_layout_table(cat.spark, cat.root, db, name)
 
 
 def write_hints(cat, db: str, name: str, hints: dict) -> None:

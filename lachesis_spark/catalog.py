@@ -55,6 +55,9 @@ TESTDATA_TABLES = (
 
 LAYOUT_FILE = "_lachesis_layout.json"
 ZONEMAP_FILE = "_lachesis_zonemap.json"
+HINTS_FILE = "_lachesis_hints.json"
+# suffix of the sibling set a rewrite stages its files in before the swap
+STAGED_SUFFIX = "__staged"
 
 
 def _zonemap_safe(v):
@@ -73,9 +76,21 @@ def _zonemap_safe(v):
     return str(v)
 
 
+def describe_table(spark: SparkSession, tbl: str) -> dict | None:
+    """The one session-table lookup: the formatted description of ``tbl``
+    as ``{col_name: data_type}``, or None when the session has no such
+    table."""
+    if not spark.catalog.tableExists(tbl):
+        return None
+    return {
+        r["col_name"]: r["data_type"]
+        for r in spark.sql(f"DESCRIBE FORMATTED {tbl}").collect()
+    }
+
+
 def ensure_layout_table(spark: SparkSession, root: str, db: str, name: str) -> bool:
-    """Re-register the session table for a bucketed set from its durable
-    layout sidecar, if present.
+    """Find the session table over set ``db.name`` under ``root``,
+    re-registering it from the durable layout sidecar when needed.
 
     ``write_set(bucket_by=...)`` registers bucket metadata in the session
     catalog, which dies with the session — a restarted session would read
@@ -84,27 +99,25 @@ def ensure_layout_table(spark: SparkSession, root: str, db: str, name: str) -> b
     (underscore-prefixed: invisible to Spark's file listings) makes the
     layout durable: this re-creates the external bucketed table over the
     same files (bucket ids live in the file names, so a plain
-    CREATE TABLE ... CLUSTERED BY over them is exact).  Returns True if a
-    table now exists."""
+    CREATE TABLE ... CLUSTERED BY over them is exact).  Returns True only
+    when a table over THIS set's path is registered, so callers read
+    through it without checking its location again."""
     import json
     import warnings
 
     tbl = f"{db}_{name}"
     path = os.path.join(root, db, name)
     meta_path = os.path.join(path, LAYOUT_FILE)
-    if spark.catalog.tableExists(tbl):
-        desc = {
-            r["col_name"]: r["data_type"]
-            for r in spark.sql(f"DESCRIBE FORMATTED {tbl}").collect()
-        }
+    desc = describe_table(spark, tbl)
+    if desc is not None:
         loc = desc.get("Location")
         if loc is not None and _same_location(loc, path):
             return True
         # Table names are session-global but Catalog roots are not: a
         # Catalog rooted elsewhere may have registered this name over ITS
         # files.  If THIS root carries a layout sidecar, the stale
-        # registration would silently shadow it (read_set's location check
-        # falls back to a plain scan and the bucket layout is lost), so
+        # registration would silently shadow it (reads would fall back to
+        # a plain scan and the bucket layout is lost), so
         # drop the stale table and re-register from our sidecar; the other
         # catalog's own read_set re-registers from its sidecar the same
         # way.  ONLY an EXTERNAL table with a successfully parsed location
@@ -138,6 +151,46 @@ def ensure_layout_table(spark: SparkSession, root: str, db: str, name: str) -> b
         f" LOCATION '{os.path.abspath(path)}'"
     )
     return True
+
+
+def _remove_sidecars(path: str, *fnames: str) -> None:
+    for fname in fnames:
+        try:
+            os.remove(os.path.join(path, fname))
+        except OSError:
+            pass
+
+
+def _swap_dir(path: str, staged: str) -> None:
+    """Replace directory ``path`` with ``staged``: the one swap behind every
+    set rewrite.  The live directory moves aside, the staged one renames
+    in, and only then is the aside copy deleted, so a crash never loses the
+    set (between the renames it sits in the aside directory, which the next
+    swap moves back first).  If the rename in fails, the aside copy moves
+    back and the staged one is deleted.
+
+    The salting-hint sidecar carries over to the new files unless they
+    bring their own (a snapshot restore brings back the one it froze); the
+    layout and zonemap sidecars never do — they describe the old files."""
+    aside = path.rstrip("/") + ".__aside__"
+    if os.path.isdir(aside):
+        if os.path.isdir(path):
+            shutil.rmtree(aside)
+        else:
+            os.rename(aside, path)
+    hints = os.path.join(path, HINTS_FILE)
+    if os.path.isfile(hints) and not os.path.exists(os.path.join(staged, HINTS_FILE)):
+        shutil.copy2(hints, staged)
+    try:
+        if os.path.isdir(path):
+            os.rename(path, aside)
+        os.rename(staged, path)
+    except BaseException:
+        if os.path.isdir(aside):
+            os.rename(aside, path)
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
+    shutil.rmtree(aside, ignore_errors=True)
 
 
 def _link_tree(src: str, dst: str) -> None:
@@ -212,70 +265,42 @@ class Catalog:
         column pruning / predicate pushdown Catalyst applies automatically.
 
         ``version=N`` time-travels to snapshot N (see :meth:`snapshot_set`)."""
-        if version is not None:
-            p = self._snapshot_path(db, name, version)
-            if not os.path.isdir(p):
-                raise ValueError(f"set {db}.{name} has no snapshot v{version}")
-            self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            return self.spark.read.parquet(p)
         # some testdata vintages store events.ts as TIMESTAMP(NANOS); expose
         # those as raw int64 nanos (callers normalize via
         # sources.readers.read_events / event_ts_expr).  No-op for the
         # current timestamp[us] encoding.
         self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        if version is not None:
+            p = self._snapshot_path(db, name, version)
+            if not os.path.isdir(p):
+                raise ValueError(f"set {db}.{name} has no snapshot v{version}")
+            return self.spark.read.parquet(p)
         # bucketed sets (write_set(bucket_by=...)) carry their layout in the
         # table identity, not the files: a bare-path read silently drops the
         # bucket metadata and every later join/agg re-shuffles — exactly the
-        # cost the advisor's layout paid to remove.  Route through the table,
-        # but only when it points at THIS catalog's path (table names are
-        # session-global; another Catalog rooted elsewhere may own the name).
-        tbl = f"{db}_{name}"
-        if (db, name) not in self._external:
-            # a restarted session has no table metadata; the durable layout
-            # sidecar re-registers the bucketed table before routing
-            ensure_layout_table(self.spark, self.root, db, name)
-        if (db, name) not in self._external and self.spark.catalog.tableExists(tbl):
-            loc = self._table_location(tbl)
-            if loc is not None and _same_location(loc, self.set_path(db, name)):
-                return self.spark.table(tbl)
+        # cost the advisor's layout paid to remove.  Route through the table
+        # when one over THIS catalog's path is registered (table names are
+        # session-global; another Catalog rooted elsewhere may own the name);
+        # a restarted session re-registers it from the layout sidecar.
+        if (db, name) not in self._external and ensure_layout_table(
+            self.spark, self.root, db, name
+        ):
+            return self.spark.table(f"{db}_{name}")
         return self.spark.read.parquet(self.set_path(db, name))
-
-    def _table_location(self, tbl: str) -> str | None:
-        return next(
-            (
-                r["data_type"]
-                for r in self.spark.sql(f"DESCRIBE FORMATTED {tbl}").collect()
-                if r["col_name"] == "Location"
-            ),
-            None,
-        )
 
     def _drop_owned_table(self, db: str, name: str) -> None:
         """Drop the session table backing this set, if it is ours.
 
-        Path rewrites (plain write_set, merge_set, compact_set) invalidate a
-        bucketed table two ways: the cached file listing goes stale
-        (FAILED_READ_FILE on next table read) and the new plain part files no
-        longer carry bucket-id names, so the table's bucket metadata would be
-        a lie.  The table is EXTERNAL (saveAsTable with an explicit path), so
-        DROP removes only metadata — the data files stay.  Only drops when
-        the table's Location matches THIS catalog's set path (names are
-        session-global; another Catalog rooted elsewhere may own the name).
+        A rewrite invalidates a bucketed table two ways: the cached file
+        listing goes stale (FAILED_READ_FILE on next table read) and new
+        plain part files no longer carry bucket-id names, so the table's
+        bucket metadata would be a lie.  The table is EXTERNAL (saveAsTable
+        with an explicit path), so DROP removes only metadata — the data
+        files and the layout sidecar stay; a writer that rewrites files in
+        place removes the sidecar itself.
         """
-        tbl = f"{db}_{name}"
-        if self.spark.catalog.tableExists(tbl):
-            loc = self._table_location(tbl)
-            if loc is not None and _same_location(loc, self.set_path(db, name)):
-                self.spark.sql(f"DROP TABLE {tbl}")
-        # every caller is a rewrite/teardown path, so the durable layout
-        # sidecar is about to be as stale as the table was — remove it or a
-        # later read_set would re-register bucket metadata over plain files
-        # (snapshot restores bring their own sidecar back with the files)
-        for sidecar in (LAYOUT_FILE, ZONEMAP_FILE):
-            try:
-                os.remove(os.path.join(self.set_path(db, name), sidecar))
-            except OSError:
-                pass
+        if ensure_layout_table(self.spark, self.root, db, name):
+            self.spark.sql(f"DROP TABLE {db}_{name}")
 
     def write_set(
         self,
@@ -305,9 +330,10 @@ class Catalog:
         range-partitioned/sorted writer): clustering is what makes per-file
         ranges tight enough to prune.  Stats are computed distributed (one
         column-pruned scan grouped by input_file_name; only n_files rows
-        reach the driver) and the sidecar is deleted by every rewrite path
-        (:meth:`_drop_owned_table`), with a fail-safe reader: files absent
-        from the sidecar are always kept.
+        reach the driver), re-recorded by every rewrite that keeps the set's
+        rows (:meth:`merge_set`, :meth:`apply_cdc`, :meth:`compact_set`) and
+        removed by a plain write without ``zonemap_by``, with a fail-safe
+        reader: files absent from the sidecar are always kept.
         """
         if (db, name) in self._external:
             raise ValueError(f"set {db}.{name} is external/read-only")
@@ -365,46 +391,54 @@ class Catalog:
             if zonemap_by:
                 self._write_zonemap(db, name, zonemap_by)
             return
-        # a plain path write invalidates any bucketed table we own here
+        # a plain path write invalidates any bucketed table we own here, and
+        # the sidecars describe files an overwrite deletes or an append joins
+        path = self.set_path(db, name)
         self._drop_owned_table(db, name)
+        _remove_sidecars(path, LAYOUT_FILE, ZONEMAP_FILE)
         writer = df.write.mode(mode)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.set_path(db, name))
+        writer.parquet(path)
         if zonemap_by:
             self._write_zonemap(db, name, zonemap_by)
 
-    def _write_zonemap(self, db: str, name: str, cols: list[str]) -> None:
-        """One distributed, column-pruned pass over the fresh set: per-file
-        min/max of ``cols`` keyed by input_file_name (n_files rows to the
-        driver), persisted as the zonemap sidecar."""
-        import json
+    def _file_stats(self, path: str, cols: list[str], *dirs: str) -> dict:
+        """Per-file ``[min, max]`` of ``cols`` over ``dirs`` of the set at
+        ``path`` (all of it when none are given): one distributed,
+        column-pruned pass grouped by input_file_name, so only n_files rows
+        reach the driver.  Keys are paths RELATIVE to the set root, not
+        basenames: a partitioned write emits the SAME part-file basename
+        into every partition directory one task touches, so basename keys
+        would collide across partitions."""
         from urllib.parse import unquote, urlparse
 
         from pyspark.sql import functions as F
 
-        path = self.set_path(db, name)
-        aggs = []
-        for c in cols:
-            aggs.append(F.min(c).alias(f"min__{c}"))
-            aggs.append(F.max(c).alias(f"max__{c}"))
+        aggs = [F.min(c).alias(f"min__{c}") for c in cols]
+        aggs += [F.max(c).alias(f"max__{c}") for c in cols]
         rows = (
-            self.spark.read.parquet(path)
+            self.spark.read.option("basePath", path)
+            .parquet(*(dirs or (path,)))
             .groupBy(F.input_file_name().alias("file"))
             .agg(*aggs)
             .collect()
         )
-        # keys are paths RELATIVE to the set root, not basenames: a
-        # partitioned write emits the SAME part-file basename into every
-        # partition directory one task touches, so basename keys collide
-        # across partitions and entries silently overwrite each other.
-        files = {
+        return {
             os.path.relpath(unquote(urlparse(r["file"]).path), path): {
                 c: [_zonemap_safe(r[f"min__{c}"]), _zonemap_safe(r[f"max__{c}"])]
                 for c in cols
             }
             for r in rows
         }
+
+    def _write_zonemap(self, db: str, name: str, cols: list[str]) -> None:
+        """Record the zonemap sidecar: per-file stats of ``cols`` over the
+        whole set."""
+        import json
+
+        path = self.set_path(db, name)
+        files = self._file_stats(path, cols)
         with open(os.path.join(path, ZONEMAP_FILE), "w") as fh:
             json.dump({"cols": list(cols), "files": files}, fh)
 
@@ -450,6 +484,7 @@ class Catalog:
         zmp = os.path.join(path, ZONEMAP_FILE)
         if not os.path.isfile(zmp):
             return residual(self.read_set(db, name))
+        self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         with open(zmp) as fh:
             zm = json.load(fh)
         mapped = set(zm.get("cols", []))
@@ -490,7 +525,6 @@ class Catalog:
         if not kept:
             # nothing can match: an empty frame with the set's schema
             return residual(self.spark.read.parquet(path).limit(0))
-        self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return residual(
             self.spark.read.option("basePath", path).parquet(*kept)
         )
@@ -518,80 +552,112 @@ class Catalog:
         is collected to the driver — small by definition of an incremental
         update.
 
-        A zone-mapped set keeps its skipping: the sidecar's stat columns
-        are captured before the rewrite and the stats re-recorded after
-        (one column-pruned pass), so a daily-merged date-clustered set
-        never silently loses pruning.
+        A zone-mapped set keeps its skipping: the stats are re-recorded
+        after the rewrite (see :meth:`_rewrite`), so a daily-merged
+        date-clustered set never silently loses pruning.
         """
         from pyspark.sql import functions as F
 
         if (db, name) in self._external:
             raise ValueError(f"set {db}.{name} is external/read-only")
-        zm_cols = self._zonemap_cols(db, name)
-        # the merge rewrites plain part files; a bucketed table over this
-        # path would keep a stale listing AND falsely-advertised bucketing
-        self._drop_owned_table(db, name)
-        path = self.set_path(db, name)
-        if not self.exists_set(db, name):
-            w = updates.write.mode("overwrite")
+        touched = None
+        if self.exists_set(db, name):
+            existing = self.read_set(db, name)
             if partition_col:
-                w = w.partitionBy(partition_col)
-            w.parquet(path)
-            return
-        existing = self.read_set(db, name)
-        if partition_col:
-            touched = [
-                r[0] for r in updates.select(partition_col).distinct().collect()
-            ]
-            existing = existing.where(F.col(partition_col).isin(touched))
-            merged = existing.join(
+                touched = [
+                    r[0] for r in updates.select(partition_col).distinct().collect()
+                ]
+                existing = existing.where(F.col(partition_col).isin(touched))
+            updates = existing.join(
                 updates.select(*key_cols).distinct(), key_cols, "left_anti"
             ).unionByName(updates)
-            old = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        self._rewrite(updates, db, name, partition_col, touched)
+
+    def _rewrite(
+        self,
+        df: DataFrame,
+        db: str,
+        name: str,
+        partition_col: str | None = None,
+        touched: list | None = None,
+        emptied: list | tuple = (),
+    ) -> None:
+        """The one rewrite tail of merge_set, apply_cdc and compact_set:
+        write ``df`` over the set, drop the bucketed table the old files
+        backed, and re-record the zonemap over the new files.
+
+        With ``partition_col`` the write is a dynamic partition overwrite
+        in place: only the partitions present in ``df`` are replaced, the
+        ``emptied`` ones are then deleted (dynamic overwrite alone would
+        keep their stale files), and the zonemap is updated for the
+        ``touched`` partitions only (rebuilt when ``touched`` is None).
+        Otherwise ``df`` — which reads the live files, so it cannot
+        overwrite them — is written to a staged sibling directory and
+        swapped in (:func:`_swap_dir`)."""
+        zm_cols = self._zonemap_cols(db, name)
+        path = self.set_path(db, name)
+        if partition_col:
+            conf, key = self.spark.conf, "spark.sql.sources.partitionOverwriteMode"
+            old = conf.get(key)
+            conf.set(key, "dynamic")
             try:
-                merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+                df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
             finally:
-                self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-            if zm_cols:
-                # incremental sidecar upkeep: O(touched partitions), not
-                # O(corpus) — see _update_zonemap_partitions
-                self._update_zonemap_partitions(
-                    db, name, zm_cols, partition_col, touched
+                conf.set(key, old)
+            for p in emptied:
+                shutil.rmtree(
+                    os.path.join(path, f"{partition_col}={p}"), ignore_errors=True
                 )
-            return
-        merged = existing.join(
-            updates.select(*key_cols).distinct(), key_cols, "left_anti"
-        ).unionByName(updates)
-        # the output overwrites the input path, so materialize first, then swap
-        tmp = path.rstrip("/") + ".__merge_tmp__"
-        merged.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(path)
-        os.rename(tmp, path)
-        if zm_cols:
+            _remove_sidecars(path, LAYOUT_FILE)
+            self._drop_owned_table(db, name)
+        else:
+            staged = self.set_path(db, name + STAGED_SUFFIX)
+            df.write.mode("overwrite").parquet(staged)
+            self._drop_owned_table(db, name)
+            _swap_dir(path, staged)
+        if zm_cols and touched is not None:
+            self._update_zonemap_partitions(db, name, zm_cols, partition_col, touched)
+        elif zm_cols:
             self._write_zonemap(db, name, zm_cols)
+
+    def relayout_set(self, df: DataFrame, db: str, name: str, **layout) -> None:
+        """Rewrite set ``db.name`` from ``df`` — a frame over the set itself
+        — under ``layout`` (:meth:`write_set`'s layout keywords).  ``df`` is
+        written as a staged sibling set (never over the files it reads),
+        swapped in for the live files (:func:`_swap_dir`: the old layout
+        stays intact until the new one is fully written), and the layout
+        table is re-registered from the fresh sidecar, so joins on a new
+        bucket key plan exchange-free at once."""
+        if (db, name) in self._external:
+            raise ValueError(f"set {db}.{name} is external/read-only")
+        staged = name + STAGED_SUFFIX
+        self.write_set(df, db, staged, **layout)
+        # the staged bucketed table is ours (write_set just registered it);
+        # its files and sidecars move with the swap
+        self.spark.sql(f"DROP TABLE IF EXISTS {db}_{staged}")
+        self._drop_owned_table(db, name)
+        _swap_dir(self.set_path(db, name), self.set_path(db, staged))
+        ensure_layout_table(self.spark, self.root, db, name)
 
     def _update_zonemap_partitions(
         self, db: str, name: str, cols: list[str],
         partition_col: str, touched: list,
     ) -> None:
-        """INCREMENTAL zonemap maintenance for a partition-scoped merge
-        (round-9: the full `_write_zonemap` rebuild re-scans the whole set,
-        so a daily merge into a 100 TB corpus paid O(corpus) for sidecar
-        upkeep even though only O(touched partitions) of data changed —
-        measured superlinear in tools/layout_write_probe.py).  This
-        re-scans ONLY the touched partition directories, replaces their
-        files' stat entries, and drops entries for files the dynamic
-        overwrite deleted; untouched partitions keep their recorded stats
-        verbatim.  Cost: one column-pruned scan of the touched partitions
-        plus an O(#files) filesystem walk (metadata only).
+        """INCREMENTAL zonemap maintenance for a partition-scoped rewrite
+        (a full `_write_zonemap` rebuild re-scans the whole set, so a daily
+        merge into a 100 TB corpus would pay O(corpus) for sidecar upkeep
+        even though only O(touched partitions) of data changed — measured
+        superlinear in tools/layout_write_probe.py).  This re-scans ONLY
+        the touched partition directories, replaces their files' stat
+        entries, and drops entries for files the rewrite deleted;
+        untouched partitions keep their recorded stats verbatim.  Cost: one
+        column-pruned scan of the touched partitions plus an O(#files)
+        filesystem walk (metadata only).
 
         Falls back to the full rebuild when the sidecar is missing or its
         stat columns changed, or when a stat column IS the partition
         column (its values never appear inside the files)."""
         import json
-
-        from pyspark.sql import functions as F
 
         path = self.set_path(db, name)
         zmp = os.path.join(path, ZONEMAP_FILE)
@@ -613,27 +679,7 @@ class Catalog:
             for v in touched
             if os.path.isdir(d := os.path.join(path, f"{partition_col}={v}"))
         ]
-        fresh: dict[str, dict] = {}
-        if tdirs:
-            from urllib.parse import unquote, urlparse
-
-            aggs = []
-            for c in cols:
-                aggs.append(F.min(c).alias(f"min__{c}"))
-                aggs.append(F.max(c).alias(f"max__{c}"))
-            rows = (
-                self.spark.read.option("basePath", path).parquet(*tdirs)
-                .groupBy(F.input_file_name().alias("file"))
-                .agg(*aggs)
-                .collect()
-            )
-            fresh = {
-                os.path.relpath(unquote(urlparse(r["file"]).path), path): {
-                    c: [_zonemap_safe(r[f"min__{c}"]), _zonemap_safe(r[f"max__{c}"])]
-                    for c in cols
-                }
-                for r in rows
-            }
+        fresh = self._file_stats(path, cols, *tdirs) if tdirs else {}
         kept = {
             f: st for f, st in zm.get("files", {}).items()
             if f in live and f not in fresh
@@ -690,7 +736,6 @@ class Catalog:
 
         if (db, name) in self._external:
             raise ValueError(f"set {db}.{name} is external/read-only")
-        zm_cols = self._zonemap_cols(db, name)
         data_cols = [c for c in changes.columns if c != op_col]
         others = [c for c in data_cols if c not in key_cols]
         if version_col not in others:
@@ -719,14 +764,10 @@ class Catalog:
             inserts = win.filter(F.col("__op") == "upsert").select(
                 *key_cols, *[F.col(f"__c.{c}").alias(c) for c in others]
             )
-            w = inserts.write.mode("overwrite")
-            if partition_col:
-                w = w.partitionBy(partition_col)
-            w.parquet(self.set_path(db, name))
+            self._rewrite(inserts, db, name, partition_col)
             return
-        self._drop_owned_table(db, name)
-        path = self.set_path(db, name)
         existing = self.read_set(db, name)
+        touched = None
         if partition_col:
             touched = [
                 r[0]
@@ -751,36 +792,16 @@ class Catalog:
             .filter(F.col("__r").isNotNull())
             .select(*key_cols, *[F.col(f"__r.{c}").alias(c) for c in others])
         )
+        emptied = []
         if partition_col:
-            # dynamic overwrite only replaces partitions PRESENT in the
-            # output: a touched partition whose every row was deleted
-            # would silently keep its old files.  Compute the surviving
-            # partition set first (one partition-scoped aggregate), then
-            # remove fully-emptied partition directories after the write.
+            # a touched partition whose every row was deleted is absent from
+            # the output: find the surviving partitions first (one
+            # partition-scoped aggregate) so the rewrite can delete the rest
             present = {
                 r[0] for r in merged.select(partition_col).distinct().collect()
             }
-            old = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-            finally:
-                self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-            for p in touched:
-                if p not in present:
-                    shutil.rmtree(
-                        os.path.join(path, f"{partition_col}={p}"),
-                        ignore_errors=True,
-                    )
-            if zm_cols:
-                self._write_zonemap(db, name, zm_cols)
-            return
-        tmp = path.rstrip("/") + ".__merge_tmp__"
-        merged.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(path)
-        os.rename(tmp, path)
-        if zm_cols:
-            self._write_zonemap(db, name, zm_cols)
+            emptied = [p for p in touched if p not in present]
+        self._rewrite(merged, db, name, partition_col, touched, emptied)
 
     def compact_set(
         self,
@@ -802,11 +823,8 @@ class Catalog:
 
         if (db, name) in self._external:
             raise ValueError(f"set {db}.{name} is external/read-only")
-        zm_cols = self._zonemap_cols(db, name)
-        self._drop_owned_table(db, name)
-        path = self.set_path(db, name)
         size = 0
-        for root, _dirs, files in os.walk(path):
+        for root, _dirs, files in os.walk(self.set_path(db, name)):
             size += sum(
                 os.path.getsize(os.path.join(root, f))
                 for f in files
@@ -815,24 +833,10 @@ class Catalog:
         n_files = max(1, -(-size // target_file_bytes))  # ceil
         df = self.read_set(db, name)
         if partition_col:
-            old = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                (
-                    df.repartition(n_files, F.col(partition_col))
-                    .write.mode("overwrite")
-                    .partitionBy(partition_col)
-                    .parquet(path)
-                )
-            finally:
-                self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+            df = df.repartition(n_files, F.col(partition_col))
         else:
-            tmp = path.rstrip("/") + ".__compact_tmp__"
-            df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-            shutil.rmtree(path)
-            os.rename(tmp, path)
-        if zm_cols:
-            self._write_zonemap(db, name, zm_cols)
+            df = df.coalesce(n_files)
+        self._rewrite(df, db, name, partition_col)
         return n_files
 
     # -- snapshots / time travel -------------------------------------------
@@ -884,20 +888,10 @@ class Catalog:
         if not os.path.isdir(src):
             raise ValueError(f"set {db}.{name} has no snapshot v{version}")
         self._drop_owned_table(db, name)
-        path = self.set_path(db, name)
-        tmp = path.rstrip("/") + ".__restore_tmp__"
-        old = path.rstrip("/") + ".__old__"
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        _link_tree(src, tmp)
-        # swap via rename so a crash never leaves the set missing: the live
-        # dir moves aside first, the staged copy renames into place, and only
-        # then is the aside copy deleted (interrupt between the renames
-        # leaves both the snapshot and the aside copy intact)
-        if os.path.isdir(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
+        staged = self.set_path(db, name + STAGED_SUFFIX)
+        shutil.rmtree(staged, ignore_errors=True)
+        _link_tree(src, staged)
+        _swap_dir(self.set_path(db, name), staged)
 
     def export_set(
         self, db: str, name: str, out_path: str, fmt: str = "csv"

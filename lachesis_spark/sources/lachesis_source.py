@@ -79,6 +79,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from lachesis_spark.binding import base_table
+from lachesis_spark.catalog import describe_table, ensure_layout_table
 
 if TYPE_CHECKING:  # pragma: no cover
     import pyarrow as pa
@@ -86,6 +87,8 @@ if TYPE_CHECKING:  # pragma: no cover
 # ~128 MB of compressed parquet per input partition: the same order as
 # spark.sql.files.maxPartitionBytes, so task sizing matches the native scan.
 TARGET_SPLIT_BYTES = 128 * 1024 * 1024
+# the Catalog root ``db.set`` identifiers resolve under without a ``root``
+DEFAULT_ROOT = os.path.join("spark-warehouse", "lachesis")
 
 
 def _resolve_path(options) -> str:
@@ -102,7 +105,7 @@ def _resolve_path(options) -> str:
         )
     if os.sep in ident or "/" in ident:
         return ident
-    root = options.get("root") or os.path.join("spark-warehouse", "lachesis")
+    root = options.get("root") or DEFAULT_ROOT
     parts = ident.split(".")
     if len(parts) != 2:
         raise ValueError(f"set identifier must be 'db.set', got {ident!r}")
@@ -130,10 +133,7 @@ def set_layout(spark, db: str, name: str) -> dict:
     (empty dict for unbucketed sets).  Callers planning co-located joins can
     consult this and route through ``Catalog.read_set`` for the
     Exchange-free plan."""
-    tbl = f"{db}_{name}"
-    if not spark.catalog.tableExists(tbl):
-        return {}
-    rows = {r["col_name"]: r["data_type"] for r in spark.sql(f"DESCRIBE FORMATTED {tbl}").collect()}
+    rows = describe_table(spark, f"{db}_{name}") or {}
     out: dict = {}
     if "Num Buckets" in rows:
         out["num_buckets"] = int(rows["Num Buckets"])
@@ -166,39 +166,22 @@ def read_set(spark, ident: str, root: Optional[str] = None,
     is_path = os.sep in ident or "/" in ident
     if not is_path and ident.count(".") == 1:
         db, name = ident.split(".")
-        tbl = f"{db}_{name}"
-        resolved = _resolve_path({"path": ident, "root": root})
-        from lachesis_spark.catalog import ensure_layout_table
-
-        # a restarted session lost the table metadata; the durable layout
+        # True only when a table over this set's path is registered; a
+        # restarted session lost the table metadata, and the durable layout
         # sidecar written by write_set(bucket_by=...) re-registers it
-        ensure_layout_table(
-            spark, root or os.path.join("spark-warehouse", "lachesis"), db, name
-        )
-        if spark.catalog.tableExists(tbl):
-            loc = next(
-                (
-                    r["data_type"]
-                    for r in spark.sql(f"DESCRIBE FORMATTED {tbl}").collect()
-                    if r["col_name"] == "Location"
-                ),
-                None,
-            )
-            from lachesis_spark.catalog import _same_location
-
-            if loc is not None and _same_location(loc, resolved):
-                layout = set_layout(spark, db, name)
-                if use_table_route:
-                    return spark.table(tbl)
-                if layout.get("num_buckets"):
-                    warnings.warn(
-                        f"reading bucketed set {ident} via format('lachesis') "
-                        f"discards its {layout['num_buckets']}-bucket layout on "
-                        f"{layout['bucket_cols']}; joins on the bucket key will "
-                        "re-Exchange (use the table route to keep the layout)",
-                        UserWarning,
-                        stacklevel=2,
-                    )
+        if ensure_layout_table(spark, root or DEFAULT_ROOT, db, name):
+            if use_table_route:
+                return spark.table(f"{db}_{name}")
+            layout = set_layout(spark, db, name)
+            if layout.get("num_buckets"):
+                warnings.warn(
+                    f"reading bucketed set {ident} via format('lachesis') "
+                    f"discards its {layout['num_buckets']}-bucket layout on "
+                    f"{layout['bucket_cols']}; joins on the bucket key will "
+                    "re-Exchange (use the table route to keep the layout)",
+                    UserWarning,
+                    stacklevel=2,
+                )
     reader = spark.read.format("lachesis")
     if root is not None:
         reader = reader.option("root", root)
