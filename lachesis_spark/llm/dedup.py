@@ -29,7 +29,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lachesis_spark.functions import hashing as H
@@ -452,12 +452,14 @@ WHERE dp / (na.nrm * nb.nrm) >= {COSINE_THRESHOLD}
 
 
 # ---------------------------------------------------------------------------
-# 6. Connected components over the LSH candidate pairs: min-label
-#    propagation, the step that turns near-dup *pairs* into dedup *groups*
-#    (each doc keeps the smallest doc_id of its component as canonical).
-#    Fixed CC_ITERS sweeps ≈ min-label BFS of that depth — enough for the
-#    short chains near-dup clusters form, and DuckDB-unrollable.  At 100 TB
-#    each sweep is one join+agg on the (small) pair set, not the corpus.
+# 6. Connected components over the LSH candidate pairs, the step that
+#    turns near-dup *pairs* into dedup *groups* (each doc keeps the smallest
+#    doc_id of its component as canonical).  The oracle form runs a fixed
+#    CC_ITERS min-label sweeps ≈ min-label BFS of that depth — enough for
+#    the short chains near-dup clusters form, and DuckDB-unrollable; the
+#    production form runs hook-and-jump rounds to convergence.  At 100 TB
+#    each sweep or round is a few joins and one agg on the (small) pair
+#    set, not the corpus.
 CC_ITERS = 4
 
 
@@ -477,83 +479,33 @@ def _minhash_pairs_raw(spark, sf_dir):
     )
 
 
-# below this many PAIRS the node-sized label frame is guaranteed small
-# enough (≤ 2·pairs rows of two longs ≈ 64 MB worst-case) to broadcast
-# per sweep; above it, sweeps take the co-partitioned shuffle plan
-CC_BROADCAST_PAIR_LIMIT = 2_000_000
-# Convergence-probe cadence for cc_converged: sweeps run lazily in
-# chunks of this size with ONE probe job per chunk (see the loop note).
-CC_SWEEPS_PER_PROBE = 2
-
-
-def _cc_edges(pairs, part_key: str = "v"):
+def _cc_edges(pairs):
     """Undirected edge list from a (a_id, b_id) pair frame, hash-partitioned
-    on ``part_key``.  The pair set is orders of magnitude smaller than the
-    corpus; sweeps run at a partition count sized to it, not to the
+    on ``v``.  The pair set is orders of magnitude smaller than the corpus;
+    the CC loops run at a partition count sized to it, not to the
     corpus-scale shuffle default (at test scale 64-way sweeps are pure
-    scheduling overhead).  Broadcast-mode sweeps partition by ``u`` (the
-    per-u min then combines in place); shuffle-mode sweeps partition by
-    ``v`` (the label-join side)."""
+    scheduling overhead)."""
     n_parts = max(8, pairs.rdd.getNumPartitions() // 4)
     return (
         pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
         .union(pairs.select(F.col("b_id").alias("u"), F.col("a_id").alias("v")))
-        .repartition(n_parts, part_key)
+        .repartition(n_parts, "v")
     )
 
 
-def _cc_sweep(edges, label, n_parts=None, broadcast_label=False):
-    """One min-label propagation sweep: messages = edges⋈label on the
-    destination, per-u min, fold the min into the label (left join).
-
-    Two width regimes, NEITHER of which touches the session-global
-    ``spark.sql.shuffle.partitions`` (narrowing it would silently re-plan
-    any query running concurrently in a shared driver — the exact setting
-    ``dedup_incremental_near`` targets; test-locked):
-
-    - ``broadcast_label`` (reduced pair sets, gated by
-      CC_BROADCAST_PAIR_LIMIT in cc_converged): both node-sized frames are
-      broadcast-hinted, so the sweep's only real work runs in the
-      u-partitioned edge partitions and the per-u min combines in place —
-      measured 0.6 s/run faster than any shuffle variant at sf0.1.
-    - shuffle mode (corpus-scale pair sets, where a node-sized broadcast
-      would be wrong): ``n_parts`` scopes the per-u min's shuffle to the
-      pair-set width via explicit ``repartition``.
-    """
-    label_side = F.broadcast(label) if broadcast_label else label
-    messages = edges.join(label_side, edges["v"] == label["node"]).select("u", "lbl")
-    if n_parts is not None and not broadcast_label:
-        messages = messages.repartition(n_parts, "u")
+def _cc_sweep(edges, label):
+    """One min-label propagation sweep (cc_fixed's unrolled form):
+    messages = edges⋈label on the destination, per-u min, fold the min into
+    the label (left join)."""
+    messages = edges.join(label, edges["v"] == label["node"]).select("u", "lbl")
     neighbor_min = messages.groupBy("u").agg(F.min("lbl").alias("nlbl"))
-    nm_side = F.broadcast(neighbor_min) if broadcast_label else neighbor_min
     return (
-        label.join(nm_side, label["node"] == neighbor_min["u"], "left")
+        label.join(neighbor_min, label["node"] == neighbor_min["u"], "left")
         .select(
             "node",
             F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))).alias("lbl"),
         )
     )
-
-
-def _cc_sweep_fused(edges, label, n_parts=None, broadcast_label=False):
-    """One min-label sweep as a SINGLE aggregation: fold the messages INTO
-    the label rows and take one min per node — every node owns a label
-    row, so min over {own lbl} ∪ {neighbor lbls} is exactly
-    ``least(lbl, coalesce(neighbor_min, lbl))``, with the per-u
-    aggregation and the fold-back join fused (round-11: the fold-back was
-    a second broadcast build — a whole job — per sweep in broadcast mode,
-    and a join in shuffle mode).  ONLY for the checkpointed
-    :func:`cc_converged` loop: inside :func:`cc_fixed`'s single unrolled
-    plan this form defeats exchange reuse across the duplicated label
-    subtrees (measured 10 → 85 jobs), so cc_fixed keeps :func:`_cc_sweep`."""
-    label_side = F.broadcast(label) if broadcast_label else label
-    messages = edges.join(label_side, edges["v"] == label["node"]).select(
-        F.col("u").alias("node"), "lbl"
-    )
-    u = label.unionByName(messages)
-    if n_parts is not None and not broadcast_label:
-        u = u.repartition(n_parts, "node")
-    return u.groupBy("node").agg(F.min("lbl").alias("lbl"))
 
 
 def cc_fixed(pairs, iters: int = CC_ITERS):
@@ -570,96 +522,140 @@ def cc_fixed(pairs, iters: int = CC_ITERS):
     return label.select(F.col("node").alias("doc_id"), F.col("lbl").alias("canonical_id"))
 
 
+def _cc_round(edges, label, n_parts):
+    """One hook-and-jump round over a (node, lbl) frame ``p``: hook
+    ``new[p[u]] = min(new[p[u]], p[v])`` over every directed edge (u, v) —
+    u's LABEL hooks onto v's label — then jump once, ``p = new[new]``.
+    Only hooks with ``p[v] < p[u]`` can lower a label, so only those
+    shuffle.
+
+    ``edges`` must be a cached frame hash-partitioned on ``v`` at
+    ``n_parts``.  Three explicit repartitions set the round's width: the
+    label on node, the union on node (the min) and the jump rows on key;
+    the one other exchange copies ``n_parts`` from the label side, so none
+    runs at the session-global width (test-locked).  The join strategy is
+    left to AQE."""
+    lab = label.repartition(n_parts, "node").select(
+        F.col("node").alias("key"), F.col("lbl").alias("lab")
+    )
+    # Every endpoint has a label, so the left joins match like inner ones;
+    # they keep the edge side from being picked as a broadcast build.  The
+    # coalesce keeps the filter from turning them back into inner joins.
+    hooks = (
+        edges.select(F.col("v").alias("key"), "u")
+        .join(lab, "key", "left")
+        .select(F.col("u").alias("key"), F.col("lab").alias("pv"))
+        .join(lab, "key", "left")
+        .where(F.coalesce(F.col("pv") < F.col("lab"), F.lit(True)))
+        .select(F.col("lab").alias("node"), F.col("pv").alias("lbl"))
+    )
+    new = (
+        label.unionByName(hooks)
+        .repartition(n_parts, "node")
+        .groupBy("node")
+        .agg(F.min("lbl").alias("lbl"))
+    )
+    # The jump reads ``new`` once: each node's own row (key = node, val =
+    # new[node]) meets the request rows (key = new[x]) on key.  A self-join
+    # would plan ``new`` twice, and exchanges over the cached edges are not
+    # reused, so it would run the hooks twice.
+    rows = new.select(
+        F.explode(F.array(
+            F.struct(F.col("node").alias("key"), "node", F.col("lbl").alias("val")),
+            F.struct(F.col("lbl").alias("key"), "node", F.lit(None).cast("long").alias("val")),
+        )).alias("r")
+    ).select("r.*")
+    return (
+        rows.repartition(n_parts, "key")
+        .withColumn("lbl", F.max("val").over(Window.partitionBy("key")))
+        .where(F.col("val").isNull())
+        .select("node", "lbl")
+    )
+
+
 def _cc_driver(spark, nodes, ui, vi, max_sweeps):
-    """cc_converged's driver kernel: min-label propagation on node indices
-    (ids sorted, so the smallest index is the smallest id) plus pointer
-    jumping — lbl[x] always names a node of x's component with
-    lbl[x] <= x, so lbl[lbl[x]] keeps both and collapses a label chain in
-    log steps instead of one hop per sweep."""
+    """cc_converged's driver kernel: the hook-and-jump round of
+    :func:`_cc_round` on node indices (ids sorted, so the smallest index is
+    the smallest id).  lbl[x] always names a node of x's component with
+    lbl[x] <= x; a round hooks each edge's u-label onto its v-label, then
+    jumps every pointer once."""
     lbl = np.arange(len(nodes))
     for _ in range(max_sweeps):
+        pu, pv = lbl[ui], lbl[vi]
+        hook = pv < pu
         new = lbl.copy()
-        np.minimum.at(new, ui, lbl[vi])
-        while not np.array_equal(new[new], new):
-            new = new[new]
+        np.minimum.at(new, pu[hook], pv[hook])
+        new = new[new]
         if np.array_equal(new, lbl):
             return driver_frame(spark, doc_id=nodes, canonical_id=nodes[lbl])
         lbl = new
-    raise RuntimeError(f"cc_converged did not converge in {max_sweeps} sweeps")
+    raise RuntimeError(f"cc_converged did not converge in {max_sweeps} rounds")
+
+
+def _label_drop(label):
+    """The convergence probe: the exact total drop Σ(node − lbl), 0 for the
+    identity labeling, and the one action that materializes the round's
+    lazy checkpoint."""
+    dec = "decimal(38,0)"
+    drop = F.col("node").cast(dec) - F.col("lbl").cast(dec)
+    return label.agg(F.sum(drop)).collect()[0][0]
 
 
 def cc_converged(pairs, max_sweeps: int = 200):
-    """Min-label propagation TO CONVERGENCE — the production form.
+    """Connected components TO CONVERGENCE — the production form.
 
     A fixed sweep count silently mis-groups any component whose label chain
     is deeper than the count (incremental template drift on a 100 TB corpus
-    produces exactly such chains), so this iterates until a sweep changes
-    nothing, and raises if ``max_sweeps`` runs out first.
+    produces exactly such chains), so this runs hook-and-jump rounds
+    (:func:`_cc_round`; the hook-and-shortcut family of Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014) until a round
+    changes nothing — measured at O(log n) rounds, even on long chains with
+    shuffled ids (SCALE.md) — and raises if ``max_sweeps`` rounds run out
+    first.  Each doc's
+    canonical id is its component's smallest doc_id.
 
     Edge lists under the driver gate (:func:`driver_edges`) are collected
-    and labeled by :func:`_cc_driver`.  Bigger ones sweep in Spark, where
-    the convergence test costs one tiny aggregation per sweep, no extra
-    join: labels only ever DECREASE (each sweep takes a least() with the
-    neighborhood min), so the label sum is strictly decreasing until the
-    fixpoint and "sum unchanged" ⟺ "no label changed".  The sum runs in
-    decimal(38,0) so it cannot overflow at any node-count/id scale.  Every
-    sweep lazily ``localCheckpoint``s the node-sized label frame and the
-    convergence probe materializes it; lineage stays one sweep deep, and
-    superseded checkpoint blocks are GC-released."""
+    and labeled by :func:`_cc_driver`, the same round in numpy.  Bigger
+    ones run the round in Spark, where the convergence test is one tiny
+    aggregation per round: labels only ever DECREASE, so the total drop
+    Σ(node − lbl) strictly increases from 0 until the fixpoint and "drop
+    unchanged" ⟺ "no label changed".  The sum runs in decimal(38,0) so it
+    cannot overflow at any node-count/id scale.  Every round lazily
+    checkpoints the node-sized label frame and the probe materializes it,
+    so lineage stays one round deep; superseded checkpoint blocks are
+    GC-released.  No path writes the session conf (test-locked in
+    tests/test_dedup_components.py)."""
     pairs = pairs.cache()  # read twice by the edge union; released just below
-    # size-gated plan choice, decided from the ACTUAL edge count (one
-    # job on the checkpointed edge frame): small edge lists go to the
-    # driver; reduced pair sets broadcast the node-sized label per sweep
-    # (fastest measured Spark plan, zero sweep shuffles of real data);
-    # pair sets too big for a safe broadcast re-partition once onto the
-    # label-join key and take the co-partitioned shuffle plan with the
-    # width scoped per-frame.  No path writes the session conf
-    # (test-locked in tests/test_dedup_components.py).  Checkpoints are
-    # LAZY: each sweep's convergence probe is the one action that also
-    # materializes its checkpoint (plans/la.py's chunked-loop pattern).
-    edges = _cc_edges(pairs, "u").transform(_barrier)
+    edges = _cc_edges(pairs).transform(_barrier)
     n_parts = edges.rdd.getNumPartitions()
     n_edges = edges.count()
     pairs.unpersist()
     g = driver_edges(edges, n_edges)
     if g is not None:
         return _cc_driver(edges.sparkSession, *g, max_sweeps)
-    broadcast_ok = n_edges <= 2 * CC_BROADCAST_PAIR_LIMIT
-    if not broadcast_ok:
-        edges = edges.repartition(n_parts, "v").transform(_barrier)
-    nodes = (
+    # the checkpoint forgets its partitioning under AQE and a cache keeps
+    # it, so the rounds read one cached copy partitioned on v
+    edges = edges.repartition(n_parts, "v").cache()
+    label = (
         edges.select(F.col("u").alias("node"))
         .repartition(n_parts, "node")
         .distinct()
+        .withColumn("lbl", F.col("node"))
+        .transform(_barrier)
     )
-    label = nodes.withColumn("lbl", F.col("node")).transform(_barrier)
-    # Probe every CC_SWEEPS_PER_PROBE sweeps instead of every sweep: the
-    # loop is probe-latency-bound (~0.2 s job launch + codegen per probe,
-    # measured), and because labels only ever DECREASE, "sum unchanged
-    # across a chunk of sweeps" ⟺ "no label changed in any of them" —
-    # the convergence test stays exact, at the cost of at most
-    # chunk−1 no-op sweeps after the fixpoint (lazy, folded into the
-    # final probe's job).
-    prev_sum = None
-    done = 0
-    while done < max_sweeps:
-        todo = min(CC_SWEEPS_PER_PROBE, max_sweeps - done)
-        for _ in range(todo):
-            label = _cc_sweep_fused(
-                edges, label, n_parts, broadcast_label=broadcast_ok
-            ).transform(_barrier)
-        done += todo
-        s = label.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        if s == prev_sum:
-            break
-        prev_sum = s
-    else:  # pragma: no cover - defensive bound
-        raise RuntimeError(
-            f"cc_converged did not converge in {max_sweeps} sweeps"
-        )
-    return label.select(F.col("node").alias("doc_id"), F.col("lbl").alias("canonical_id"))
+    try:
+        prev = 0
+        for _ in range(max_sweeps):
+            label = _cc_round(edges, label, n_parts).transform(_barrier)
+            drop = _label_drop(label)
+            if drop == prev:
+                return label.select(
+                    F.col("node").alias("doc_id"), F.col("lbl").alias("canonical_id")
+                )
+            prev = drop
+        raise RuntimeError(f"cc_converged did not converge in {max_sweeps} rounds")
+    finally:
+        edges.unpersist()
 
 
 def cc_incremental(labels, new_pairs):
@@ -1091,7 +1087,6 @@ def dedup_semantic(
     threshold: float = COSINE_THRESHOLD,
     block_rows: int = 2048,
 ):
-    from pyspark.sql import Window
 
     emb = _emb(spark, sf_dir).select(
         "vec_id", V.to_double_array("embedding").alias("e")

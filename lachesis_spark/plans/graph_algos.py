@@ -101,8 +101,8 @@ def triangle_counts(und: DataFrame) -> DataFrame:
 
 
 # dense-regime gate: bitmap bytes = n·⌈n/64⌉·8 ≤ ~32 MB → n ≤ 16384.  The
-# same size-gated two-regime pattern as dedup's cc_converged broadcast
-# sweeps: one metadata-cheap count on the checkpointed frame picks the
+# same size-gated two-regime pattern as the graph loops' driver gate
+# (``core.driver_edges``): one count on the checkpointed frame picks the
 # plan; both regimes produce identical results (test-locked).
 DENSE_N_MAX = 16384
 
@@ -456,8 +456,8 @@ def kcore_layers(
             .groupBy("u")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        # ONE materializing action per sweep (the cc_converged fusion
-        # pattern): annotate every alive node with its keep/remove verdict
+        # ONE materializing action per sweep (as cc_converged has per
+        # round): annotate every alive node with its keep/remove verdict
         # in a single lazily-checkpointed frame — the exit-check count is
         # the job that materializes it, and the next sweep's alive plus
         # this sweep's removed layer are both cheap filters over the

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from lachesis_spark.llm import dedup as D
@@ -88,7 +89,11 @@ def test_cc_converged_never_touches_session_conf(spark, monkeypatch):
     spark.sql.shuffle.partitions for the sweep loop, silently re-planning
     any concurrent query in a shared driver.  The width is now scoped with
     explicit per-frame repartition — the session conf must never be
-    written, so a concurrently planned query keeps its default width."""
+    written, so a concurrently planned query keeps its default width.  The
+    driver gate is zeroed so the chain takes the Spark loop."""
+    from lachesis_spark.operators import core
+
+    monkeypatch.setattr(core, "DRIVER_LOOP_ROW_LIMIT", 0)
     calls = []
     real_set = spark.conf.set
     monkeypatch.setattr(
@@ -101,44 +106,66 @@ def test_cc_converged_never_touches_session_conf(spark, monkeypatch):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_cc_sweep_exchanges_are_pair_set_width(spark):
-    """The sweep's one shuffle (per-u min) runs at the pair-set width via
-    explicit repartition: every hash exchange in the sweep plan is
-    n_parts-wide — none at the session's corpus-sized default."""
+def test_cc_round_exchanges_are_pair_set_width(spark):
+    """Every hash exchange of a hook-and-jump round runs at the pair-set
+    width ``n_parts`` — none at the session's corpus-sized default.  The
+    pair frame is spread so that ``n_parts`` differs from that default, and
+    the inputs are built the way cc_converged builds them (cached edges, a
+    checkpointed label)."""
     import re
 
-    pairs = _chain_pairs(spark, 60)
-    edges = D._cc_edges(pairs)
+    from lachesis_spark.operators.core import barrier
+
+    pairs = _chain_pairs(spark, 60).repartition(64)
+    edges = D._cc_edges(pairs).cache()
     n_parts = edges.rdd.getNumPartitions()
+    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n_parts != default
     label = (
         edges.select(F.col("u").alias("node")).distinct()
-        .withColumn("lbl", F.col("node"))
+        .withColumn("lbl", F.col("node")).transform(barrier)
     )
     plan = (
-        D._cc_sweep(edges, label, n_parts)
+        D._cc_round(edges, label, n_parts)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    widths = {int(w) for w in re.findall(r"hashpartitioning\([^)]*?(\d+)\)", plan)}
-    assert widths == {n_parts}, plan
+    edges.unpersist()
+    widths = [int(w) for w in re.findall(r"hashpartitioning\([^()]*, (\d+)\)", plan)]
+    assert widths and set(widths) == {n_parts}, plan
 
 
-def test_cc_converged_shuffle_and_broadcast_paths_agree(spark, monkeypatch):
-    """The size gate picks broadcast sweeps for reduced pair sets and
-    co-partitioned shuffle sweeps for corpus-scale ones; both must produce
-    identical labelings (forced here by zeroing the gate).  The driver
-    gate is zeroed too, so both runs take a Spark loop."""
+def _shuffled_path(spark, n_nodes, seed):
+    """A path over ``n_nodes`` ids whose order along the path is a seeded
+    shuffle — the shape on which one-hop label propagation and plain
+    pointer jumping both need far more than log-many rounds."""
+    ids = np.random.RandomState(seed).permutation(n_nodes)
+    return spark.createDataFrame(
+        [(int(min(a, b)), int(max(a, b))) for a, b in zip(ids[:-1], ids[1:])],
+        "a_id bigint, b_id bigint",
+    )
+
+
+def test_cc_converged_shuffled_long_path_at_default_gate(spark):
+    """A 4,097-node path (8,192 directed edges, far under the driver gate)
+    with shuffled ids is one component labeled 0 at the default
+    ``max_sweeps``."""
+    n = 4097
+    rows = D.cc_converged(_shuffled_path(spark, n, seed=7)).collect()
+    assert sorted(r["doc_id"] for r in rows) == list(range(n))
+    assert {r["canonical_id"] for r in rows} == {0}
+
+
+def test_cc_converged_spark_loop_shuffled_chain(spark, monkeypatch):
+    """With the driver gate zeroed, a shuffled 256-hop chain converges in
+    the Spark loop at the default ``max_sweeps``.  Seed 3 puts id 0 251
+    hops from the far end, more than a one-hop-per-sweep loop can cover in
+    200 sweeps."""
     from lachesis_spark.operators import core
 
     monkeypatch.setattr(core, "DRIVER_LOOP_ROW_LIMIT", 0)
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21), (4, 10)],
-        "a_id bigint, b_id bigint",
-    )
-    bc = {r["doc_id"]: r["canonical_id"] for r in D.cc_converged(pairs).collect()}
-    monkeypatch.setattr(D, "CC_BROADCAST_PAIR_LIMIT", 0)
-    sh = {r["doc_id"]: r["canonical_id"] for r in D.cc_converged(pairs).collect()}
-    assert bc == sh
-    assert set(bc.values()) == {1, 20}
+    rows = D.cc_converged(_shuffled_path(spark, 257, seed=3)).collect()
+    assert sorted(r["doc_id"] for r in rows) == list(range(257))
+    assert {r["canonical_id"] for r in rows} == {0}
 
 
 def test_cc_incremental_equals_full_recompute(spark):

@@ -5,8 +5,8 @@ Below ``core.DRIVER_LOOP_ROW_LIMIT`` each loop collects its edge list or
 matrix and iterates in numpy on the driver.  The kernels must return the
 rows the partitioned Spark loops return (exactly for the integer graph
 results, to rounding for the LA ones); the Spark side is forced by zeroing
-the gate, the same way the CC tests force the shuffle regime.  Example
-counts stay low because every Spark-side example is a multi-job loop."""
+the gate.  Example counts stay low because every Spark-side example is a
+multi-job loop."""
 
 from __future__ import annotations
 
@@ -37,7 +37,11 @@ raw_edges = st.lists(
 COMPONENTS = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21), (30, 31)]
 # the path 0-1-2 and the 4-cycle 5-6-7-8 leave every vote tied
 TIED = [(0, 1), (1, 2), (5, 6), (6, 7), (7, 8), (5, 8)]
+# two chains bridged by (4, 10), plus an isolated pair
+BRIDGED = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21), (4, 10)]
 CHAIN = [(i, i + 1) for i in range(199)]  # 200 nodes
+_ids = np.random.RandomState(3).permutation(200)
+SHUFFLED_CHAIN = [(int(a), int(b)) for a, b in zip(_ids[:-1], _ids[1:])]
 
 
 def _und(spark, edges):
@@ -59,15 +63,14 @@ def _both_regimes(monkeypatch, run):
 @SET
 @given(edges=raw_edges)
 @example(edges=COMPONENTS)
+@example(edges=BRIDGED)
 @example(edges=CHAIN)
+@example(edges=SHUFFLED_CHAIN)
 def test_cc_driver_matches_spark(spark, monkeypatch, edges):
     pairs = spark.createDataFrame(
         [(min(a, b), max(a, b)) for a, b in edges], "a_id long, b_id long"
     )
-    # the Spark loop needs one sweep per chain hop, plus the probe chunk
-    driver, spark_side = _both_regimes(
-        monkeypatch, lambda: D.cc_converged(pairs, max_sweeps=2 * len(CHAIN))
-    )
+    driver, spark_side = _both_regimes(monkeypatch, lambda: D.cc_converged(pairs))
     assert driver == spark_side
 
 
@@ -106,8 +109,12 @@ def test_lpa_driver_matches_spark(spark, monkeypatch, edges):
     assert driver == spark_side
 
 
-def test_cc_driver_raises_when_sweeps_run_out(spark):
+def test_cc_driver_raises_when_sweeps_run_out(spark, monkeypatch):
+    """One round cannot label a 200-node chain, on either side of the gate."""
     pairs = spark.createDataFrame(CHAIN, "a_id long, b_id long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        D.cc_converged(pairs, max_sweeps=1)
+    monkeypatch.setattr(core, "DRIVER_LOOP_ROW_LIMIT", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
         D.cc_converged(pairs, max_sweeps=1)
 
