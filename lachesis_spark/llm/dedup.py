@@ -37,6 +37,7 @@ from lachesis_spark.functions import text as TX
 from lachesis_spark.functions import vectors as V
 
 from lachesis_spark.binding import base_table
+from lachesis_spark.llm.textstats import _docs
 
 from lachesis_spark.operators.core import barrier as _barrier
 from lachesis_spark.operators.core import driver_edges, driver_frame
@@ -45,20 +46,6 @@ N_BANDS = 8
 SHINGLE_N = 3
 COSINE_THRESHOLD = 0.3
 SIMHASH_BITS = 16
-
-
-def _docs(spark: SparkSession, sf_dir: str, floor: bool = True) -> DataFrame:
-    # parallelism floor (opt-out): the expensive per-row expressions most
-    # consumers run (md5 windows, shingling, tokenize/explode) otherwise run
-    # on however few splits the (test-scale) file offers — 1 at sf0.1; the
-    # gate reads actual scan splits, so a big corpus is a no-op (measured:
-    # text_rolling_fp 2.9 -> 0.5 s at sf0.1).  Aggregate-only consumers
-    # pass floor=False and scan raw — the round-robin buys them nothing
-    # (round-6 regression triage: quality_classifier/sample_temperature).
-    from lachesis_spark.operators.core import parallelism_floor
-
-    df = base_table(spark, sf_dir, "documents")
-    return parallelism_floor(df, spark) if floor else df
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -679,7 +666,6 @@ def cc_incremental(labels, new_pairs):
 
 def dedup_incremental_near(
     sig_index: DataFrame | None, labels: DataFrame | None, new_docs: DataFrame,
-    bloom: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """One batch step of the incremental NEAR-dup loop — the 100 TB/day
     operational form, completing what ``dedup_incremental`` (exact hashes)
@@ -712,31 +698,12 @@ def dedup_incremental_near(
         .select("a_id", "b_id")
     )
     if sig_index is not None:
-        a_probe = a
-        if bloom:
-            # Bloom pre-screen (``bloom=True``): a words-sized bitmap over
-            # the index's (band, minhash) keys screens the BATCH side
-            # map-side, so signature rows whose key cannot exist in the
-            # index never enter the batch×index join at all.  No false
-            # negatives ⇒ the candidate pair set is identical
-            # (test-locked).  The words build scans the index once; in the
-            # operational loop it is built when the index epoch rolls and
-            # amortized over every batch in the epoch.
-            key = (F.col("band").cast("long") * F.lit(1 << 60)) + F.col("minhash")
-            words = bloom_words(sig_index.select(key.alias("bk")), F.col("bk"))
-            a_probe = a.where(
-                bloom_member(
-                    (F.col("band").cast("long") * F.lit(1 << 60))
-                    + F.col("minhash"),
-                    words,
-                )
-            )
         idx = sig_index.select(F.col("doc_id").alias("b_id"),
                                F.col("band").alias("band2"),
                                F.col("minhash").alias("minhash2"))
         cross = (
-            a_probe.join(idx, (F.col("band") == F.col("band2"))
-                   & (F.col("minhash") == F.col("minhash2")))
+            a.join(idx, (F.col("band") == F.col("band2"))
+               & (F.col("minhash") == F.col("minhash2")))
             .filter(F.col("a_id") != F.col("b_id"))
             .select(F.least("a_id", "b_id").alias("a_id"),
                     F.greatest("a_id", "b_id").alias("b_id"))

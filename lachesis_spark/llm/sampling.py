@@ -60,7 +60,7 @@ from pyspark.sql import functions as F
 from lachesis_spark.functions import hashing as H
 from lachesis_spark.functions import text as TX
 
-from lachesis_spark.binding import base_table
+from lachesis_spark.llm.textstats import _docs
 
 from lachesis_spark.operators.core import barrier as _barrier
 
@@ -82,10 +82,6 @@ MIX_RATES = {f"src{i}": r for i, r in zip(range(20), [1.0, 0.5, 0.25, 0.1] * 5)}
 _KEY_SQL = "CAST(doc_id AS VARCHAR)"
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return base_table(spark, sf_dir, "documents")
-
-
 def _key(df: DataFrame, key_col: str) -> Column:
     return df[key_col].cast("string")
 
@@ -99,7 +95,7 @@ def sample_bernoulli(df: DataFrame, key_col: str, rate: float, seed: int) -> Dat
 
 
 def sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = _docs(spark, sf_dir, floor=False)
     return sample_bernoulli(docs, "doc_id", SAMPLE_RATE, SEED_SAMPLE).select(
         "doc_id", "lang", "source"
     )
@@ -136,7 +132,7 @@ def assign_split(
 
 
 def sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = assign_split(_docs(spark, sf_dir), "doc_id")
+    docs = assign_split(_docs(spark, sf_dir, floor=False), "doc_id")
     return docs.groupBy("split", "source").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").alias("sum_chars"),
@@ -173,7 +169,7 @@ def mix_sources(
 
 
 def sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = mix_sources(_docs(spark, sf_dir), "source", "doc_id", MIX_RATES)
+    docs = mix_sources(_docs(spark, sf_dir, floor=False), "source", "doc_id", MIX_RATES)
     return docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(TX.token_count("text")).cast("long").alias("sum_tokens"),
@@ -241,7 +237,7 @@ def pack_sequences(
 
 
 def pack_sequences_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = _docs(spark, sf_dir, floor=False)
     packed = pack_sequences(docs, "doc_id", TX.token_count("text"))
     return packed.groupBy("bucket", "bin").agg(
         F.count("*").alias("n_docs"),
@@ -281,7 +277,7 @@ def pack_manifest_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-(bucket, bin) collect whose size is bounded by budget/min_doc_tok
     entries — a property of the packing, not the corpus.
     """
-    docs = _docs(spark, sf_dir)
+    docs = _docs(spark, sf_dir, floor=False)
     packed = pack_sequences(docs, "doc_id", TX.token_count("text"))
     return packed.groupBy("bucket", "bin").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -358,7 +354,7 @@ def sample_stratified(
 
 
 def sample_stratified_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = _docs(spark, sf_dir, floor=False)
     return sample_stratified(docs, "lang", "doc_id", STRAT_N).select("doc_id", "lang")
 
 
@@ -395,7 +391,7 @@ SEED_WEIGHTED = 2106
 
 
 def sample_weighted_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = _docs(spark, sf_dir, floor=False)
     return sample_weighted(
         docs, "doc_id", F.col("n_chars"), WEIGHTED_N, SEED_WEIGHTED
     ).select("doc_id", "lang", "n_chars")
@@ -462,7 +458,7 @@ def cap_per_domain(
 
 
 def sample_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = _docs(spark, sf_dir, floor=False)
     capped = cap_per_domain(docs, "doc_id", "source")
     return capped.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_kept"),
@@ -573,7 +569,7 @@ def dsir_logweights(
 
 
 def sample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = _docs(spark, sf_dir, floor=False)
     lw = dsir_logweights(
         docs, F.col("lang") == DSIR_TARGET_LANG, carry=("lang",)
     )

@@ -32,27 +32,13 @@ from pyspark.sql import functions as F
 
 from lachesis_spark.functions import text as TX
 
-from lachesis_spark.binding import base_table
+from lachesis_spark.llm.textstats import _docs
 
 SHINGLE_N = 3
 EVAL_DOCS = 10  # doc_id < EVAL_DOCS plays the held-out benchmark set
 
 EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 PHONE_RE = "\\b[0-9]{3}-[0-9]{3}-[0-9]{4}\\b"
-
-
-def _docs(spark: SparkSession, sf_dir: str, floor: bool = True) -> DataFrame:
-    # parallelism floor (opt-out): the expensive per-row expressions most
-    # consumers run (md5 windows, shingling, tokenize/explode) otherwise run
-    # on however few splits the (test-scale) file offers — 1 at sf0.1; the
-    # gate reads actual scan splits, so a big corpus is a no-op (measured:
-    # text_rolling_fp 2.9 -> 0.5 s at sf0.1).  Aggregate-only consumers
-    # pass floor=False and scan raw — the round-robin buys them nothing
-    # (round-6 regression triage: quality_classifier/sample_temperature).
-    from lachesis_spark.operators.core import parallelism_floor
-
-    df = base_table(spark, sf_dir, "documents")
-    return parallelism_floor(df, spark) if floor else df
 
 
 def scrub_text(col, token: str = "<PII>"):

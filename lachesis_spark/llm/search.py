@@ -41,10 +41,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lachesis_spark.binding import base_table
+from lachesis_spark.llm.textstats import _docs
 
 from lachesis_spark.operators.core import barrier as _barrier
 
@@ -57,15 +57,6 @@ B = 0.75
 BM25_TERMS = ["spark", "window", "merge"]
 AND_TERMS = ["dup", "spark", "sort"]  # "dup" is the rare discriminator (~5% df)
 PHRASE = ("fast", "sort")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lachesis_spark.operators.core import parallelism_floor
-
-    df = base_table(spark, sf_dir, "documents")
-    # tokenize+explode is exactly the expensive-per-row shape the floor
-    # exists for (see llm/textstats._docs)
-    return parallelism_floor(df, spark)
 
 
 def _tokens_col():

@@ -66,7 +66,7 @@ from pyspark.sql import functions as F
 from lachesis_spark.functions import hashing as H
 from lachesis_spark.functions import text as TX
 
-from lachesis_spark.binding import base_table
+from lachesis_spark.llm.textstats import _docs
 
 from lachesis_spark.operators.core import barrier as _barrier
 
@@ -83,20 +83,6 @@ MIX_WEIGHTS = (("src0", 0.3), ("src5", 0.3), ("src10", 0.2), ("src15", 0.2))
 
 _SQL_TOKENS = "list_filter(string_split(lower(text), ' '), t -> t <> '')"
 _KEY_SQL = "CAST(doc_id AS VARCHAR)"
-
-
-def _docs(spark: SparkSession, sf_dir: str, floor: bool = True) -> DataFrame:
-    # parallelism floor (opt-out): the expensive per-row expressions most
-    # consumers run (md5 windows, shingling, tokenize/explode) otherwise run
-    # on however few splits the (test-scale) file offers — 1 at sf0.1; the
-    # gate reads actual scan splits, so a big corpus is a no-op (measured:
-    # text_rolling_fp 2.9 -> 0.5 s at sf0.1).  Aggregate-only consumers
-    # pass floor=False and scan raw — the round-robin buys them nothing
-    # (round-6 regression triage: quality_classifier/sample_temperature).
-    from lachesis_spark.operators.core import parallelism_floor
-
-    df = base_table(spark, sf_dir, "documents")
-    return parallelism_floor(df, spark) if floor else df
 
 
 # ---------------------------------------------------------------------------

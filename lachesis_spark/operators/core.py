@@ -110,6 +110,12 @@ def driver_edges(edges: DataFrame, n_edges: int | None):
     Spark loop."""
     if n_edges is None or n_edges > DRIVER_LOOP_ROW_LIMIT:
         return None
+    return collect_edges(edges)
+
+
+def collect_edges(edges: DataFrame):
+    """:func:`driver_edges` without the gate, for a caller that bounds
+    the collect itself."""
     u, v = (c.to_numpy().astype(np.int64) for c in edges.toArrow().columns)
     nodes, ui = np.unique(u, return_inverse=True)
     return nodes, ui, np.searchsorted(nodes, v)

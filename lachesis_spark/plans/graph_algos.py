@@ -26,7 +26,8 @@ Design for 100 TB:
   common-neighbor evidence through a celebrity hub is near-meaningless,
   and the cap bounds the quadratic term at cap²·n_centers).  The cap is
   OFF in the oracle-gated query (test graphs have no hubs) and exercised
-  in tests.
+  in tests.  Graphs whose adjacency bitmap fits the driver skip the join
+  and score pairs there (``common_neighbor_pairs``).
 - Adjacency/edge frames are lazily checkpointed once and reused across the
   deg join and both wedge sides, so the events scan runs once.
 """
@@ -40,7 +41,7 @@ from pyspark.sql import functions as F
 from lachesis_spark.plans.iterative import PR_MOD, _edges
 
 from lachesis_spark.operators.core import barrier as _barrier
-from lachesis_spark.operators.core import driver_edges, driver_frame
+from lachesis_spark.operators.core import collect_edges, driver_edges, driver_frame
 
 TOP_PAIRS = 20
 
@@ -61,6 +62,13 @@ def degrees(und: DataFrame) -> DataFrame:
         .unionAll(und.select(F.col("b").alias("v")))
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("deg"))
+    )
+
+
+def _directed(und: DataFrame) -> DataFrame:
+    """Both directions of every undirected edge, as (u, v)."""
+    return und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
+        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
 
 
@@ -100,11 +108,32 @@ def triangle_counts(und: DataFrame) -> DataFrame:
     )
 
 
-# dense-regime gate: bitmap bytes = n·⌈n/64⌉·8 ≤ ~32 MB → n ≤ 16384.  The
-# same size-gated two-regime pattern as the graph loops' driver gate
-# (``core.driver_edges``): one count on the checkpointed frame picks the
-# plan; both regimes produce identical results (test-locked).
-DENSE_N_MAX = 16384
+# Bytes the dense regime may hold on the driver: the n·⌈n/64⌉·8-byte
+# adjacency bitmap plus 16 B per collected directed edge.  A byte bound of
+# its own, not core.DRIVER_LOOP_ROW_LIMIT: the kernel never loops over the
+# edge rows, and the ×10 probe graph (15k nodes, 1.46M directed edges, so
+# over the row limit) must stay here, because its hubs' deg² term makes
+# the wedge join infeasible (SCALE.md).  64 MiB holds it (28 MB bitmap +
+# 23 MB edges).
+DENSE_BYTES_MAX = 1 << 26
+
+# float32 bytes of one unpacked bitmap tile in the pool product
+_TILE_BYTES = 1 << 24
+
+
+def _edge_node_counts(und: DataFrame) -> tuple[int, int]:
+    """(edges, nodes) of an undirected edge list in one job: edge count =
+    half the endpoint rows, node count = exact distinct endpoints."""
+    mn = (
+        und.select(F.col("a").alias("x"))
+        .unionAll(und.select(F.col("b").alias("x")))
+        .agg(
+            (F.count(F.lit(1)) / 2).cast("long").alias("m"),
+            F.count_distinct(F.col("x")).alias("n"),
+        )
+        .first()
+    )
+    return int(mn["m"]), int(mn["n"])
 
 
 def common_neighbor_pairs(
@@ -117,33 +146,31 @@ def common_neighbor_pairs(
 
     Two size-gated regimes:
 
-    - **Dense/small node set (n ≤ DENSE_N_MAX)**: the wedge join generates
-      Σ deg(c)² pairs — 30M rows to shuffle at sf0.1 for a graph whose
-      whole adjacency STRUCTURE is 280 KB of bitmaps.  Instead: build one
-      adjacency bitmap per node distributed (applyInPandas over the
-      node-grouped adjacency), collect the n ≤ 16k bitmap rows (≤ 32 MB,
-      gate-bounded — the k-means-centroid collect pattern), broadcast
-      them, and compute every pair's popcount(bits[x] & bits[y]) in a
-      numpy kernel over a partitioned node range — each task owns a slice
-      of x values, emits its local top-k, and TakeOrdered merges
-      task-count·k rows.  Adjacent pairs are masked inside the kernel
-      (bits[x] already encodes them) — no separate anti-join.  Measured
-      12.5 s → ~1 s at sf0.1.
-    - **Large node set**: the wedge self-join on the shared center —
-      the only shape that scales when bitmaps cannot broadcast — with the
+    - **Dense (bitmap + collected edges ≤ DENSE_BYTES_MAX)**: the wedge
+      join generates Σ deg(c)² pairs — 30M rows to shuffle at sf0.1 for a
+      graph whose whole adjacency STRUCTURE is 280 KB of bitmaps.  Instead
+      one (m, n) aggregate sizes the graph, one Arrow collect brings the
+      edges to the driver, and :func:`_common_neighbors_driver` scores the
+      pairs there with BLAS — the gather-and-compute-on-one-node pattern
+      of the graph and LA loops (``core.driver_edges``).
+    - **Large graph**: the wedge self-join on the shared center — the only
+      shape that scales when the bitmap does not fit one node — with the
       ``center_degree_cap`` knob for the inherent deg(center)² hub term
       (standard link-prediction practice; common-neighbor evidence
-      through a celebrity hub is near-meaningless).
+      through a celebrity hub is near-meaningless).  A cap always takes
+      this path.
     """
+    if center_degree_cap is None:
+        und = und.transform(_barrier)  # materialized by the count job
+        m, n = _edge_node_counts(und)
+        if n * ((n + 63) // 64) * 8 + 16 * 2 * m <= DENSE_BYTES_MAX:
+            x, y, c = _common_neighbors_driver(*collect_edges(_directed(und)), k)
+            return driver_frame(und.sparkSession, x=x, y=y, n_common=c)
     adj = (
         und.select(F.col("a").alias("n"), F.col("b").alias("nbr"))
         .unionAll(und.select(F.col("b").alias("n"), F.col("a").alias("nbr")))
         .transform(_barrier, eager=True)
     )
-    if center_degree_cap is None:
-        n_nodes = adj.select("n").distinct().count()
-        if n_nodes <= DENSE_N_MAX:
-            return _common_neighbors_dense(adj, k)
     centers = adj
     if center_degree_cap is not None:
         deg = adj.groupBy("n").agg(F.count(F.lit(1)).alias("deg"))
@@ -167,162 +194,75 @@ def common_neighbor_pairs(
     ).limit(k)
 
 
-def _popcount(a):
-    """Vectorized popcount over a uint64 array: np.bitwise_count when
-    available (numpy ≥ 2), else the classic SWAR reduction — 5 fused
-    uint64 passes, no 8× uint8 gather (the LUT fallback's gather made the
-    kernel memory-bound: measured 3.5× slower at n≈15k)."""
-    import numpy as np
-
-    if hasattr(np, "bitwise_count"):
-        return np.bitwise_count(a).sum(axis=-1, dtype=np.int64)
-    m1 = np.uint64(0x5555555555555555)
-    m2 = np.uint64(0x3333333333333333)
-    m4 = np.uint64(0x0F0F0F0F0F0F0F0F)
-    h0 = np.uint64(0x0101010101010101)
-    v = a - ((a >> np.uint64(1)) & m1)
-    v = (v & m2) + ((v >> np.uint64(2)) & m2)
-    v = (v + (v >> np.uint64(4))) & m4
-    return ((v * h0) >> np.uint64(56)).sum(axis=-1, dtype=np.int64)
-
-
-def _common_neighbors_dense(adj: DataFrame, k: int) -> DataFrame:
-    """Bitset kernel for the gate-bounded dense regime (see
-    common_neighbor_pairs), with FAGIN-STYLE THRESHOLD TERMINATION:
-    c(x, y) = |N(x) ∩ N(y)| ≤ min(deg x, deg y), so the exact top-k is
-    found by scoring pairs within a degree-descending pool of D nodes and
-    growing D (×4 per round) until the kth score ≥ deg of the (D+1)-th
-    node — every pair outside the pool is then provably below the kth.
-    On hub-heavy graphs (the shape the ×10 probe builds: 100 dst hubs at
-    deg ~7000 over ~190-deg users) the bound fires at D ≈ 2k+hubs and the
-    kernel touches ~D²/2 pairs instead of n²/2 — measured 66 s → ~2 s at
-    ×10; on degree-uniform graphs the bound cannot fire and the final
-    round IS the full kernel, which the DENSE_N_MAX gate keeps bounded.
-    Counts are always over FULL bitmaps (all n nodes as potential common
-    neighbors) — the pool restricts which PAIRS are scored, never the
-    evidence, so results are exact."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    spark = adj.sparkSession
-    ids = [r["n"] for r in adj.select("n").distinct().orderBy("n").collect()]
-    n = len(ids)
-    idx_of = {v: i for i, v in enumerate(ids)}
-    words = (n + 63) // 64
-    b_idx = spark.sparkContext.broadcast(idx_of)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        imap = b_idx.value
-        out = []
-        for node, grp in pdf.groupby("n"):
-            w = np.zeros(words, dtype=np.uint64)
-            nb = np.fromiter((imap[v] for v in grp["nbr"]), dtype=np.int64)
-            np.bitwise_or.at(w, nb // 64, np.uint64(1) << (nb % 64).astype(np.uint64))
-            # signed view: LongType cannot carry uint64 values with the top
-            # bit set; the collector views it back as uint64
-            out.append((int(imap[node]), w.view(np.int64).tolist()))
-        return pd.DataFrame(out, columns=["i", "bits"])
-
-    bm_schema = T.StructType(
-        [
-            T.StructField("i", T.IntegerType()),
-            T.StructField("bits", T.ArrayType(T.LongType())),
-        ]
-    )
-    rows = (
-        adj.repartition(min(32, max(2, n // 64)), "n")
-        .groupBy("n")
-        .applyInPandas(lambda pdf: build(pdf), schema=bm_schema)
-        .collect()  # n rows ≤ 16384 (gate-bounded), ≤ 32 MB
-    )
-    bm = np.zeros((n, words), dtype=np.uint64)
-    for r in rows:
-        bm[r["i"]] = np.array(r["bits"], dtype=np.int64).view(np.uint64)
-    b_bm = spark.sparkContext.broadcast(bm)
-    b_ids = spark.sparkContext.broadcast(ids)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("x", T.LongType()),
-            T.StructField("y", T.LongType()),
-            T.StructField("n_common", T.LongType()),
-        ]
-    )
-
-    deg = _popcount(bm)  # per-row popcount -> node degrees
-    # degree-descending pool order, id-ascending tiebreak (deterministic)
-    pool_order = np.lexsort((np.arange(n), -deg))
-    b_pool = spark.sparkContext.broadcast(pool_order)
-
-    def make_kernel(D):
-        def kernel(iterator):
-            B = b_bm.value
-            id_arr = np.asarray(b_ids.value, dtype=np.int64)
-            pool = b_pool.value[:D]
-            for pdf in iterator:
-                xs_l, ys_l, cs_l = [], [], []
-                for pi in pdf["id"]:
-                    pi = int(pi)
-                    if pi + 1 >= D:
-                        continue
-                    x = int(pool[pi])
-                    ys = pool[pi + 1 :]
-                    common = _popcount(np.bitwise_and(B[x], B[ys]))
-                    # mask adjacent pairs (bit y of B[x]) and zero counts
-                    adj_mask = (
-                        B[x][ys // 64] >> (ys % 64).astype(np.uint64)
-                    ).astype(np.uint64) & np.uint64(1)
-                    keep = (common > 0) & (adj_mask == 0)
-                    m_keep = int(keep.sum())
-                    if m_keep:
-                        xs_l.append(np.full(m_keep, x, dtype=np.int64))
-                        ys_l.append(ys[keep])
-                        cs_l.append(common[keep])
-                if not xs_l:
-                    yield pd.DataFrame({"x": [], "y": [], "n_common": []}).astype(
-                        {"x": "int64", "y": "int64", "n_common": "int64"}
-                    )
-                    continue
-                X = np.concatenate(xs_l)
-                Y = np.concatenate(ys_l)
-                C = np.concatenate(cs_l)
-                # canonical pair order on ORIGINAL ids (pool order is by
-                # degree, so x/y may arrive either way around)
-                xi, yi = id_arr[X], id_arr[Y]
-                lo, hi = np.minimum(xi, yi), np.maximum(xi, yi)
-                # local top-k under the GLOBAL ordering (count desc, x, y)
-                order = np.lexsort((hi, lo, -C))[:k]
-                yield pd.DataFrame(
-                    {"x": lo[order], "y": hi[order], "n_common": C[order]}
-                )
-
-        return kernel
-
+def _common_neighbors_driver(nodes, u, v, k):
+    """Exact top-k of the dense regime on the driver, as (x, y, n_common)
+    arrays in (n_common desc, x, y) order, with FAGIN-STYLE THRESHOLD
+    TERMINATION: c(x, y) = |N(x) ∩ N(y)| ≤ min(deg x, deg y), so the exact
+    top-k is found by scoring pairs within a degree-descending pool of D
+    nodes and growing D (×4 per round) until the kth score exceeds the
+    degree of the (D+1)-th node — every pair outside the pool is then
+    provably below the kth.  On hub-heavy graphs (the ×10 probe: 100 dst
+    hubs at deg ~7000 over ~190-deg users) the bound fires at D = 512; on
+    degree-uniform graphs it cannot fire and the last round scores all
+    n²/2 pairs, which the DENSE_BYTES_MAX gate keeps bounded.  Counts are
+    always over FULL bitmaps (all n nodes as potential common neighbors)
+    — the pool restricts which PAIRS are scored, never the evidence."""
+    n = len(nodes)
+    bm = np.zeros((n, (n + 63) // 64), dtype=np.uint64)
+    np.bitwise_or.at(bm, (u, v >> 6), np.uint64(1) << (v & 63).astype(np.uint64))
+    deg = np.bincount(u, minlength=n)
+    # degree-descending, id-ascending tiebreak (deterministic)
+    pool = np.argsort(-deg, kind="stable")
     D = max(4 * k, 512)
     while True:
         D = min(D, n)
-        cand = (
-            spark.range(0, D, numPartitions=min(32, max(2, D // 64)))
-            .mapInPandas(make_kernel(D), schema=out_schema)
-        )
-        top = (
-            cand.orderBy(F.col("n_common").desc(), F.col("x"), F.col("y"))
-            .limit(k)
-            .transform(_barrier, eager=True)
-        )
-        if D >= n:
-            return top
-        rows = top.collect()  # k rows, bounded
-        kth = rows[-1]["n_common"] if len(rows) == k else -1
+        x, y, c = _pool_top_k(bm, pool[:D], nodes, k)
         # every unscored pair has one endpoint outside the pool, so its
         # count is bounded by that endpoint's degree.  Strict inequality:
         # an unscored pair tying the kth count could still outrank it
-        # under the (n_common desc, x asc, y asc) tiebreak, so on equality
-        # we must keep growing the pool.
-        if kth > int(deg[pool_order[D]]):
-            return top
+        # under the (n_common desc, x asc, y asc) tiebreak.
+        if D == n or (len(c) == k and c[-1] > deg[pool[D]]):
+            return x, y, c
         D *= 4
+
+
+def _unpack(bm, rows):
+    """Bitmap rows as a float32 0/1 tile, column j = node j."""
+    bits = np.unpackbits(bm[rows].view(np.uint8), axis=1, bitorder="little")
+    return bits.astype(np.float32)
+
+
+def _pool_top_k(bm, pool, nodes, k):
+    """Top-k non-adjacent pairs within ``pool`` as (x, y, n_common) arrays,
+    x < y as node ids.  Per tile pair one float32 BLAS product U_a·U_bᵀ
+    gives every pair's common-neighbor count (exact: counts ≤ n < 2^24);
+    U_a's own columns at the b tile's nodes mask the adjacent pairs.  Only
+    entries that can still enter the top-k leave a tile: at least the
+    running kth count and the tile's own kth."""
+    t = min(1024, _TILE_BYTES // (256 * max(bm.shape[1], 1)))
+    best_c = best_x = best_y = np.empty(0, dtype=np.int64)
+    for a in range(0, len(pool), t):
+        pa = pool[a : a + t]
+        ua = _unpack(bm, pa)
+        for b in range(a, len(pool), t):
+            pb = pool[b : b + t]
+            s = ua @ (ua if b == a else _unpack(bm, pb)).T
+            s[ua[:, pb] > 0] = 0
+            if b == a:
+                s = np.triu(s, 1)  # each pair once, no self pairs
+            floor = max(
+                1,
+                best_c[-1] if len(best_c) == k else 0,
+                np.partition(s, -k, axis=None)[-k] if s.size >= k else 0,
+            )
+            i, j = np.nonzero(s >= floor)
+            xs, ys = nodes[pa[i]], nodes[pb[j]]
+            c = np.concatenate([best_c, s[i, j].astype(np.int64)])
+            lo = np.concatenate([best_x, np.minimum(xs, ys)])
+            hi = np.concatenate([best_y, np.maximum(xs, ys)])
+            keep = np.lexsort((hi, lo, -c))[:k]
+            best_c, best_x, best_y = c[keep], lo[keep], hi[keep]
+    return best_x, best_y, best_c
 
 
 # ---------------------------------------------------------------------------
@@ -388,13 +328,6 @@ ORDER BY p.n_common DESC, p.x, p.y LIMIT {TOP_PAIRS}
 KCORE_ORACLE_DEPTH = 16  # unroll budget; > observed peel depth (≤5) at every
 #                          sweep SF — a deeper peel would HASH-MISMATCH (the
 #                          Spark side is depth-independent), never pass silently
-
-
-def _directed(und: DataFrame) -> DataFrame:
-    """Both directions of every undirected edge, as (u, v)."""
-    return und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
 
 
 def _kcore_driver(nodes, u, v, k):
@@ -492,19 +425,8 @@ def graph_kcore(spark, sf_dir):
     loop run engine-side; only the 2-number (m, n) aggregate reaches the
     driver to fix k (bounded collect, the k-means pattern)."""
     und = undirected_edges(spark, sf_dir).transform(_barrier, eager=True)
-    # one job for BOTH scalars: edge count = half the endpoint rows,
-    # node count = exact distinct endpoints (was two sequential counts)
-    mn = (
-        und.select(F.col("a").alias("x"))
-        .unionAll(und.select(F.col("b").alias("x")))
-        .agg(
-            (F.count(F.lit(1)) / 2).cast("long").alias("m"),
-            F.count_distinct(F.col("x")).alias("n"),
-        )
-        .first()
-    )
-    k = int(2 * mn["m"] / mn["n"])
-    return kcore_layers(und, k, m=int(mn["m"]))
+    m, n = _edge_node_counts(und)
+    return kcore_layers(und, int(2 * m / n), m=m)
 
 
 def _kcore_oracle_sql(depth: int = KCORE_ORACLE_DEPTH) -> str:

@@ -21,6 +21,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -72,6 +73,9 @@ def get_spark(
         # out of the executed plan text, and the 100-char default truncates
         # long catalog paths mid-field, mangling the parsed dataset name
         .config("spark.sql.maxMetadataStringLength", "4096")
+        # Python workers (pandas UDFs, Python data sources) import this
+        # package too; put its root on their path, whatever the cwd
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -133,20 +133,49 @@ def test_kcore_never_touches_session_conf(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
+def _pairs(und, k):
+    return [
+        (r["x"], r["y"], r["n_common"])
+        for r in G.common_neighbor_pairs(und, k=k).collect()
+    ]
+
+
 def test_dense_and_sparse_regimes_agree(spark, monkeypatch):
-    """The size-gated bitset kernel and the wedge-join path are the same
+    """The size-gated driver kernel and the wedge-join path are the same
     query: force the sparse path by zeroing the gate and compare."""
     und = G.undirected_edges(spark, SF_SMOKE).localCheckpoint(eager=True)
-    dense = [
-        (r["x"], r["y"], r["n_common"])
-        for r in G.common_neighbor_pairs(und, k=50).collect()
-    ]
-    monkeypatch.setattr(G, "DENSE_N_MAX", 0)
-    sparse = [
-        (r["x"], r["y"], r["n_common"])
-        for r in G.common_neighbor_pairs(und, k=50).collect()
-    ]
-    assert dense == sparse
+    dense = _pairs(und, 50)
+    monkeypatch.setattr(G, "DENSE_BYTES_MAX", 0)
+    assert dense == _pairs(und, 50)
+
+
+def test_pool_growth_equals_wedge_join(spark, monkeypatch):
+    """A degree-uniform graph (1,500 nodes, six seeded random Hamiltonian
+    cycles, so degree ≤ 12 everywhere): no top-k count can exceed the
+    degree of the 513th node, so the Fagin pool grows past its first
+    round.  The grown pool must still give the wedge join's exact top-k."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    n, edges = 1500, set()
+    for _ in range(6):
+        p = rng.permutation(n).tolist()
+        edges |= {(min(a, b), max(a, b)) for a, b in zip(p, p[1:] + p[:1])}
+    und = spark.createDataFrame(sorted(edges), "a long, b long").localCheckpoint(
+        eager=True
+    )
+    pools = []
+    top_k = G._pool_top_k
+
+    def recorded(bm, pool, *args):
+        pools.append(len(pool))
+        return top_k(bm, pool, *args)
+
+    monkeypatch.setattr(G, "_pool_top_k", recorded)
+    dense = _pairs(und, 20)
+    assert pools == [512, n]
+    monkeypatch.setattr(G, "DENSE_BYTES_MAX", 0)
+    assert dense == _pairs(und, 20)
 
 
 def test_sssp_levels_contiguous_and_rooted(spark):

@@ -381,22 +381,6 @@ def test_bpe_batch_fold_equals_any_sequential_order(stream, seed):
 # round-7 kernels
 
 
-@settings(max_examples=200, deadline=None)
-@given(
-    vals=st.lists(
-        st.integers(min_value=0, max_value=(1 << 64) - 1), min_size=1, max_size=8
-    )
-)
-def test_popcount_matches_int_bit_count(vals):
-    """SWAR popcount == Python int.bit_count over the word array."""
-    import numpy as np
-
-    from lachesis_spark.plans.graph_algos import _popcount
-
-    arr = np.array(vals, dtype=np.uint64)
-    assert int(_popcount(arr)) == sum(v.bit_count() for v in vals)
-
-
 @settings(max_examples=40, deadline=None)
 @given(
     lo=st.integers(min_value=-100, max_value=100),
@@ -431,10 +415,8 @@ def test_zonemap_overlap_never_prunes_a_matching_file(lo, width, fmin, fwidth):
     k=st.integers(min_value=1, max_value=8),
 )
 def test_threshold_kernel_equals_wedge_join_on_random_graphs(spark, edges, k):
-    """Dense (Fagin-threshold bitset) and sparse (wedge join) regimes give
-    identical top-k common-neighbor pairs on random graphs."""
-    import pytest
-
+    """Dense (driver Fagin-threshold kernel) and sparse (wedge join)
+    regimes give identical top-k common-neighbor pairs on random graphs."""
     from lachesis_spark.plans import graph_algos as G
 
     und = spark.createDataFrame(sorted(edges), "a long, b long").localCheckpoint(
@@ -444,15 +426,15 @@ def test_threshold_kernel_equals_wedge_join_on_random_graphs(spark, edges, k):
         (r["x"], r["y"], r["n_common"])
         for r in G.common_neighbor_pairs(und, k=k).collect()
     ]
-    old = G.DENSE_N_MAX
+    old = G.DENSE_BYTES_MAX
     try:
-        G.DENSE_N_MAX = 0  # force the wedge-join path
+        G.DENSE_BYTES_MAX = 0  # force the wedge-join path
         sparse = [
             (r["x"], r["y"], r["n_common"])
             for r in G.common_neighbor_pairs(und, k=k).collect()
         ]
     finally:
-        G.DENSE_N_MAX = old
+        G.DENSE_BYTES_MAX = old
     assert dense == sparse
 
 
