@@ -21,6 +21,8 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
+from lachesis_spark.binding import read_parquet
+
 
 def _same_location(loc: str, path: str) -> bool:
     """True when a table Location and a catalog set path name the same store.
@@ -274,7 +276,7 @@ class Catalog:
             p = self._snapshot_path(db, name, version)
             if not os.path.isdir(p):
                 raise ValueError(f"set {db}.{name} has no snapshot v{version}")
-            return self.spark.read.parquet(p)
+            return read_parquet(self.spark, p)
         # bucketed sets (write_set(bucket_by=...)) carry their layout in the
         # table identity, not the files: a bare-path read silently drops the
         # bucket metadata and every later join/agg re-shuffles — exactly the
@@ -286,7 +288,7 @@ class Catalog:
             self.spark, self.root, db, name
         ):
             return self.spark.table(f"{db}_{name}")
-        return self.spark.read.parquet(self.set_path(db, name))
+        return read_parquet(self.spark, self.set_path(db, name))
 
     def _drop_owned_table(self, db: str, name: str) -> None:
         """Drop the session table backing this set, if it is ours.
@@ -524,7 +526,7 @@ class Catalog:
         kept = [p for p in data_files if keep(os.path.relpath(p, path))]
         if not kept:
             # nothing can match: an empty frame with the set's schema
-            return residual(self.spark.read.parquet(path).limit(0))
+            return residual(read_parquet(self.spark, path).limit(0))
         return residual(
             self.spark.read.option("basePath", path).parquet(*kept)
         )

@@ -26,8 +26,6 @@ LSH/IVF prefilter (llm.similarity) then exact cosine on candidates.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F

@@ -52,8 +52,6 @@ on the same hash family as its dedup operators.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 

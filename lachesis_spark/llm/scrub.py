@@ -25,8 +25,6 @@ contamination unit is exactly the dedup unit.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

@@ -39,8 +39,6 @@ ln(1+(N-df+0.5)/(df+0.5)) idf), and phrase adjacency; scores rounded at
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 

@@ -24,8 +24,6 @@ Python in the plan (functions.hashing.h60).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

@@ -10,8 +10,6 @@ expressions, which keeps a 100 TB corpus pass inside whole-stage codegen.)
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

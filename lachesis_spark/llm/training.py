@@ -58,8 +58,6 @@ module counts — but never string-replaces — in round 2.)
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

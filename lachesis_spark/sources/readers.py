@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lachesis_spark.binding import base_table, read_parquet
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -54,15 +56,11 @@ def event_ts_expr(dtype: str, ltz: bool = False) -> str:
 def read_events(spark: SparkSession, sf_dir: str, ltz: bool = False) -> DataFrame:
     """Schema-drift-tolerant reader for the events table: normalizes `ts`
     to an event-time timestamp whatever encoding the parquet file uses."""
-    import os
-
     # legacy conf only matters for genuinely-nanos files; harmless otherwise
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if sf_dir.endswith(".parquet"):
-        df = spark.read.parquet(sf_dir)
+        df = read_parquet(spark, sf_dir)
     else:
-        from lachesis_spark.binding import base_table
-
         df = base_table(spark, sf_dir, "events")
     return df.withColumn("ts", F.expr(event_ts_expr(dict(df.dtypes)["ts"], ltz=ltz)))
 
@@ -107,10 +105,6 @@ def read_csv(
         .option("header", header)
         .csv(path)
     )
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:

@@ -50,6 +50,20 @@ def canon(rows, colnames):
     return sorted(tuple(norm(r[i]) for i in order) for r in rows)
 
 
+def jobs_in_group(spark, group, run):
+    """``run()``'s result and the number of Spark jobs it launched, counted
+    through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def assert_matches_oracle(spark_df, duck_con, sql):
     srows, scols = spark_df.collect(), spark_df.columns
     res = duck_con.execute(sql)

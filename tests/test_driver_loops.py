@@ -19,7 +19,7 @@ from lachesis_spark.llm import dedup as D
 from lachesis_spark.operators import core
 from lachesis_spark.plans import graph_algos as G
 from lachesis_spark.plans import la, la_dsl
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_in_group
 
 SET = settings(
     max_examples=4,
@@ -119,20 +119,6 @@ def test_cc_driver_raises_when_sweeps_run_out(spark, monkeypatch):
         D.cc_converged(pairs, max_sweeps=1)
 
 
-def _jobs_in_group(spark, group, run):
-    """``run()``'s result and the number of Spark jobs it launched, counted
-    through a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_cc_below_gate_runs_fixed_job_count(spark):
     """Below the gate the job count does not grow with chain depth: the
     per-sweep Spark loop would add a probe job every two sweeps."""
@@ -141,7 +127,7 @@ def test_cc_below_gate_runs_fixed_job_count(spark):
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(n - 1)], "a_id long, b_id long"
         )
-        rows, jobs[n] = _jobs_in_group(
+        rows, jobs[n] = jobs_in_group(
             spark, f"cc-driver-regime-{n}", lambda: D.cc_converged(pairs).collect()
         )
         assert {r["canonical_id"] for r in rows} == {0}
@@ -217,10 +203,13 @@ def test_power_iteration_driver_matches_spark(spark, monkeypatch, name, m, spd):
 def test_power_iteration_job_count_does_not_grow_with_steps(spark, monkeypatch):
     """Below the gate the steps run in numpy: 16 steps launch exactly the
     jobs 8 steps do, where the Spark loop checkpoints every step."""
+    # the first read of a table file infers its schema (one job, cached
+    # per file version by binding.read_parquet); take it before counting
+    la.la_power_iteration(spark, SF_SMOKE).collect()
     jobs = {}
     for iters in (8, 16):
         monkeypatch.setattr(la, "POWER_ITERS", iters)
-        rows, jobs[iters] = _jobs_in_group(
+        rows, jobs[iters] = jobs_in_group(
             spark, f"power-driver-regime-{iters}",
             lambda: la.la_power_iteration(spark, SF_SMOKE).collect(),
         )

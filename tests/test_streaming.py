@@ -781,13 +781,16 @@ def test_staged_replay_rebuild_race_loser_adopts_winner(tmp_path, monkeypatch):
 
 
 def test_staged_dir_schema_not_cached_without_stamp(spark, tmp_path):
-    """A staged dir without ``_source.stamp`` has no version to key a
-    cache on: rebuilding it with a different schema must be seen."""
+    """A staged dir without ``_source.stamp`` has no stamp to key a cache
+    on: rebuilding it with a different schema must be seen by the schema
+    read the replays use."""
     import shutil
+
+    from lachesis_spark.binding import read_parquet
 
     d = str(tmp_path / "staged")
     spark.createDataFrame([(1, "a")], "k long, s string").write.parquet(d)
-    assert S._staged_dir_schema(spark, d).fieldNames() == ["k", "s"]
+    assert read_parquet(spark, d).schema.fieldNames() == ["k", "s"]
     shutil.rmtree(d)
     spark.createDataFrame([(1.5,)], "x double").write.parquet(d)
-    assert S._staged_dir_schema(spark, d).fieldNames() == ["x"]
+    assert read_parquet(spark, d).schema.fieldNames() == ["x"]
