@@ -613,9 +613,8 @@ def cc_converged(pairs, max_sweeps: int = 200):
     pairs = pairs.cache()  # read twice by the edge union; released just below
     edges = _cc_edges(pairs).transform(_barrier)
     n_parts = edges.rdd.getNumPartitions()
-    n_edges = edges.count()
+    g = driver_edges(edges)  # also materializes the edge checkpoint
     pairs.unpersist()
-    g = driver_edges(edges, n_edges)
     if g is not None:
         return _cc_driver(edges.sparkSession, *g, max_sweeps)
     # the checkpoint forgets its partitioning under AQE and a cache keeps

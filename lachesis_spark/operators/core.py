@@ -101,22 +101,21 @@ def barrier(df: DataFrame, eager: bool = False) -> DataFrame:
 DRIVER_LOOP_ROW_LIMIT = 1 << 19
 
 
-def driver_edges(edges: DataFrame, n_edges: int | None):
-    """The one small-input gate for the graph loops.  ``edges`` holds (u, v)
-    for every edge in both directions, and ``n_edges`` is the caller's own
-    count of its rows.  At most DRIVER_LOOP_ROW_LIMIT rows: one Arrow
-    collect, returned as (sorted node ids, u, v) with u and v as indices
-    into the node ids.  Otherwise (or count unknown): ``None`` — run the
-    Spark loop."""
-    if n_edges is None or n_edges > DRIVER_LOOP_ROW_LIMIT:
+def driver_edges(edges: DataFrame, max_rows: int | None = None):
+    """The one small-input gate for the graph loops: a bounded probe.
+    ``edges`` holds (u, v) for every edge in both directions.  One Arrow
+    collect of at most ``max_rows`` + 1 rows (default
+    DRIVER_LOOP_ROW_LIMIT): if at most ``max_rows`` came back, that is the
+    whole frame, returned as (sorted node ids, u, v) with u and v as
+    indices into the node ids.  Otherwise ``None`` — run the Spark loop.
+    The probe computes every partition of ``edges``, so it also
+    materializes a lazy barrier the caller put under it."""
+    if max_rows is None:
+        max_rows = DRIVER_LOOP_ROW_LIMIT
+    tbl = edges.limit(max_rows + 1).toArrow()
+    if tbl.num_rows > max_rows:
         return None
-    return collect_edges(edges)
-
-
-def collect_edges(edges: DataFrame):
-    """:func:`driver_edges` without the gate, for a caller that bounds
-    the collect itself."""
-    u, v = (c.to_numpy().astype(np.int64) for c in edges.toArrow().columns)
+    u, v = (c.to_numpy().astype(np.int64) for c in tbl.columns)
     nodes, ui = np.unique(u, return_inverse=True)
     return nodes, ui, np.searchsorted(nodes, v)
 
@@ -222,7 +221,6 @@ def join(
     equi: Sequence[Column],
     theta: Column | None = None,
     projection: Sequence[ColumnLike] | None = None,
-    broadcast_under_rows: int | None = None,
 ) -> DataFrame:
     """JoinComp: variadic multi-way inner join.
 
@@ -251,8 +249,6 @@ def join(
         raise ValueError("need one equi condition per joined input")
     acc = inputs[0]
     for i, right in enumerate(inputs[1:]):
-        if broadcast_under_rows is not None:
-            right = F.broadcast(right)
         acc = acc.join(right, on=equi[i], how="inner") if equi else acc.crossJoin(right)
     if theta is not None:
         acc = acc.filter(theta)

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from lachesis_spark.plans.iterative import PR_MOD, _edges
 
 from lachesis_spark.operators.core import barrier as _barrier
-from lachesis_spark.operators.core import collect_edges, driver_edges, driver_frame
+from lachesis_spark.operators.core import driver_edges, driver_frame
 
 TOP_PAIRS = 20
 
@@ -149,10 +149,10 @@ def common_neighbor_pairs(
     - **Dense (bitmap + collected edges ≤ DENSE_BYTES_MAX)**: the wedge
       join generates Σ deg(c)² pairs — 30M rows to shuffle at sf0.1 for a
       graph whose whole adjacency STRUCTURE is 280 KB of bitmaps.  Instead
-      one (m, n) aggregate sizes the graph, one Arrow collect brings the
-      edges to the driver, and :func:`_common_neighbors_driver` scores the
+      one bounded Arrow collect (``core.driver_edges``) brings the edges
+      to the driver, and :func:`_common_neighbors_driver` scores the
       pairs there with BLAS — the gather-and-compute-on-one-node pattern
-      of the graph and LA loops (``core.driver_edges``).
+      of the graph and LA loops.
     - **Large graph**: the wedge self-join on the shared center — the only
       shape that scales when the bitmap does not fit one node — with the
       ``center_degree_cap`` knob for the inherent deg(center)² hub term
@@ -161,11 +161,13 @@ def common_neighbor_pairs(
       this path.
     """
     if center_degree_cap is None:
-        und = und.transform(_barrier)  # materialized by the count job
-        m, n = _edge_node_counts(und)
-        if n * ((n + 63) // 64) * 8 + 16 * 2 * m <= DENSE_BYTES_MAX:
-            x, y, c = _common_neighbors_driver(*collect_edges(_directed(und)), k)
-            return driver_frame(und.sparkSession, x=x, y=y, n_common=c)
+        und = und.transform(_barrier)  # materialized by the probe
+        g = driver_edges(_directed(und), DENSE_BYTES_MAX // 16)
+        if g is not None:
+            n = len(g[0])
+            if n * ((n + 63) // 64) * 8 + 16 * len(g[1]) <= DENSE_BYTES_MAX:
+                x, y, c = _common_neighbors_driver(*g, k)
+                return driver_frame(und.sparkSession, x=x, y=y, n_common=c)
     adj = (
         und.select(F.col("a").alias("n"), F.col("b").alias("nbr"))
         .unionAll(und.select(F.col("b").alias("n"), F.col("a").alias("nbr")))
@@ -347,12 +349,11 @@ def _kcore_driver(nodes, u, v, k):
         alive &= ~gone
 
 
-def kcore_layers(
-    und: DataFrame, k: int, n_parts: int = 32, m: int | None = None
-) -> DataFrame:
+def kcore_layers(und: DataFrame, k: int | None = None, n_parts: int = 32) -> DataFrame:
     """Onion decomposition by k-core peeling: repeatedly remove every node
     with fewer than ``k`` ALIVE neighbors; a node's ``layer`` is the round
     that removed it (1-based), survivors — the k-core — get layer 0.
+    ``k`` defaults to the mean degree, ⌊2m / n⌋.
 
     The convergence-checked production form (same operational shape as
     dedup's ``cc_converged``): each sweep is one co-partitioned
@@ -362,11 +363,18 @@ def kcore_layers(
     nothing.  Sweep count = peel depth (graph-dependent, typically
     O(log n) on heavy-tailed graphs); the alive frame only shrinks, so
     per-sweep cost falls monotonically.  Graphs under the driver gate
-    (``m`` edges given and small) peel in numpy instead."""
-    g = driver_edges(_directed(und), None if m is None else 2 * m)
+    (:func:`~lachesis_spark.operators.core.driver_edges`) peel in numpy
+    instead."""
+    und = und.transform(_barrier)  # materialized by the probe
+    g = driver_edges(_directed(und))
     if g is not None:
+        if k is None:
+            k = len(g[1]) // len(g[0])
         layer = _kcore_driver(*g, k)
         return driver_frame(und.sparkSession, node=g[0], layer=layer).orderBy("node")
+    if k is None:
+        m, n = _edge_node_counts(und)
+        k = 2 * m // n
     # edges live partitioned by the NEIGHBOR endpoint v: the per-sweep
     # alive-filter join (on v) is then co-partitioned and exchange-free,
     # and the only shuffle a sweep pays is the degree groupBy on u.
@@ -421,12 +429,11 @@ def kcore_layers(
 
 
 def graph_kcore(spark, sf_dir):
-    """Onion layers of the events graph at k = mean degree: k and the peel
-    loop run engine-side; only the 2-number (m, n) aggregate reaches the
-    driver to fix k (bounded collect, the k-means pattern)."""
-    und = undirected_edges(spark, sf_dir).transform(_barrier, eager=True)
-    m, n = _edge_node_counts(und)
-    return kcore_layers(und, int(2 * m / n), m=m)
+    """Onion layers of the events graph at k = mean degree.  Under the
+    driver gate the one edge collect gives k and the peel; above it a
+    2-number (m, n) aggregate fixes k and the peel loop runs
+    engine-side."""
+    return kcore_layers(undirected_edges(spark, sf_dir))
 
 
 def _kcore_oracle_sql(depth: int = KCORE_ORACLE_DEPTH) -> str:
@@ -498,23 +505,25 @@ def _bfs_driver(nodes, u, v, src):
     return nodes[seen], dist[seen]
 
 
-def sssp_hops(
-    und: DataFrame, src: int, n_parts: int = 32, m: int | None = None
-) -> DataFrame:
-    """Hop distances from ``src`` by frontier BFS — the convergence-checked
-    production loop (same shape as ``kcore_layers``): per level, one
-    co-partitioned frontier⋈edges join expands the frontier, one anti-join
-    against the visited set removes known nodes; exit when a level adds
-    nothing.  Level count = the source's eccentricity (small-world graphs:
-    O(log n)); the per-level join is frontier-sized, never graph-sized, and
-    both frames are explicitly repartitioned on their key — the session
-    shuffle conf is never touched.  Unreachable nodes are absent (standard
-    BFS contract).  Graphs under the driver gate run :func:`_bfs_driver`."""
+def sssp_hops(und: DataFrame, src: int | None = None, n_parts: int = 32) -> DataFrame:
+    """Hop distances from ``src`` (default: the smallest node id) by
+    frontier BFS — the convergence-checked production loop (same shape
+    as ``kcore_layers``): per level, one co-partitioned frontier⋈edges
+    join expands the frontier, one anti-join against the visited set
+    removes known nodes; exit when a level adds nothing.  Level count =
+    the source's eccentricity (small-world graphs: O(log n)); the
+    per-level join is frontier-sized, never graph-sized, and both frames
+    are explicitly repartitioned on their key — the session shuffle conf
+    is never touched.  Unreachable nodes are absent (standard BFS
+    contract).  Graphs under the driver gate run :func:`_bfs_driver`."""
     spark = und.sparkSession
-    g = driver_edges(_directed(und), None if m is None else 2 * m)
+    und = und.transform(_barrier)  # materialized by the probe
+    g = driver_edges(_directed(und))
     if g is not None:
-        node, dist = _bfs_driver(*g, src)
+        node, dist = _bfs_driver(*g, int(g[0][0]) if src is None else src)
         return driver_frame(spark, node=node, dist=dist)
+    if src is None:
+        src = int(und.agg(F.min("a")).first()[0])
     e = _directed(und).repartition(n_parts, "u").transform(_barrier, eager=True)
     dist = (
         spark.createDataFrame([(src, 0)], "node long, dist long")
@@ -562,11 +571,7 @@ def graph_sssp(spark, sf_dir):
     stays engine-side; only the eccentricity-sized histogram is returned
     (what a reachability dashboard actually renders), so result size is
     O(diameter) at any corpus scale."""
-    und = undirected_edges(spark, sf_dir).transform(_barrier, eager=True)
-    # one job for BOTH scalars: the BFS source and the edge count that
-    # gates the driver loop regime
-    pr = und.agg(F.min("a").alias("src"), F.count(F.lit(1)).alias("m")).collect()[0]
-    d = sssp_hops(und, int(pr["src"]), m=int(pr["m"]))
+    d = sssp_hops(undirected_edges(spark, sf_dir))
     return (
         d.groupBy("dist")
         .agg(
@@ -634,10 +639,7 @@ def _lpa_driver(nodes, u, v, rounds):
     return nodes[lab]
 
 
-def lpa_labels(
-    und: DataFrame, rounds: int = LPA_ROUNDS, n_parts: int = 32,
-    m: int | None = None,
-) -> DataFrame:
+def lpa_labels(und: DataFrame, rounds: int = LPA_ROUNDS, n_parts: int = 32) -> DataFrame:
     """Synchronous LPA: each round every node adopts its neighbors' most
     frequent label (ties -> smallest label).  Unlike connected components
     (pure min-propagation, finds CONNECTIVITY), frequency voting finds
@@ -648,7 +650,8 @@ def lpa_labels(
     the node id, label frame checkpointed per round (the kcore/cc loop
     pattern); rounds are FIXED, not data-dependent.  Graphs under the
     driver gate vote in numpy (:func:`_lpa_driver`)."""
-    g = driver_edges(_directed(und), None if m is None else 2 * m)
+    und = und.transform(_barrier)  # materialized by the probe
+    g = driver_edges(_directed(und))
     if g is not None:
         return driver_frame(und.sparkSession, node=g[0], lbl=_lpa_driver(*g, rounds))
     # FIXED round count and every frame used exactly once downstream, so
@@ -683,12 +686,8 @@ def lpa_labels(
 def graph_lpa(spark, sf_dir):
     """Community-size distribution after LPA_ROUNDS of label propagation:
     (community_size, n_communities) — the model-sized summary a community
-    dashboard renders (per-node labels stay engine-side).  The edge count
-    that gates the driver regime also materializes und's lazy checkpoint,
-    so the collect (or the Spark chain) reads persisted blocks."""
-    und = undirected_edges(spark, sf_dir).transform(_barrier)
-    m = und.count()
-    lab = lpa_labels(und, m=m)
+    dashboard renders (per-node labels stay engine-side)."""
+    lab = lpa_labels(undirected_edges(spark, sf_dir))
     sizes = lab.groupBy("lbl").agg(F.count(F.lit(1)).cast("long").alias("csize"))
     return (
         sizes.groupBy("csize")

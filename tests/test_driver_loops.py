@@ -14,6 +14,7 @@ import numpy as np
 import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from lachesis_spark.llm import dedup as D
 from lachesis_spark.operators import core
@@ -48,7 +49,7 @@ def _und(spark, edges):
     """Canonical undirected edge frame (a < b, distinct), like
     ``undirected_edges``."""
     und = sorted({(min(a, b), max(a, b)) for a, b in edges})
-    return spark.createDataFrame(und, "a long, b long"), len(und)
+    return spark.createDataFrame(und, "a long, b long")
 
 
 def _both_regimes(monkeypatch, run):
@@ -78,9 +79,9 @@ def test_cc_driver_matches_spark(spark, monkeypatch, edges):
 @given(edges=raw_edges, k=st.integers(1, 4))
 @example(edges=COMPONENTS, k=2)
 def test_kcore_driver_matches_spark(spark, monkeypatch, edges, k):
-    und, m = _und(spark, edges)
+    und = _und(spark, edges)
     driver, spark_side = _both_regimes(
-        monkeypatch, lambda: G.kcore_layers(und, k, n_parts=2, m=m)
+        monkeypatch, lambda: G.kcore_layers(und, k, n_parts=2)
     )
     assert driver == spark_side
 
@@ -90,9 +91,9 @@ def test_kcore_driver_matches_spark(spark, monkeypatch, edges, k):
 @example(edges=COMPONENTS, src=10)  # nodes 1-4, 20-21, 30-31 unreachable
 @example(edges=COMPONENTS, src=99)  # source outside the graph
 def test_bfs_driver_matches_spark(spark, monkeypatch, edges, src):
-    und, m = _und(spark, edges)
+    und = _und(spark, edges)
     driver, spark_side = _both_regimes(
-        monkeypatch, lambda: G.sssp_hops(und, src, n_parts=2, m=m)
+        monkeypatch, lambda: G.sssp_hops(und, src, n_parts=2)
     )
     assert driver == spark_side
 
@@ -102,11 +103,60 @@ def test_bfs_driver_matches_spark(spark, monkeypatch, edges, src):
 @example(edges=TIED)
 @example(edges=[])
 def test_lpa_driver_matches_spark(spark, monkeypatch, edges):
-    und, m = _und(spark, edges)
+    und = _und(spark, edges)
     driver, spark_side = _both_regimes(
-        monkeypatch, lambda: G.lpa_labels(und, n_parts=2, m=m)
+        monkeypatch, lambda: G.lpa_labels(und, n_parts=2)
     )
     assert driver == spark_side
+
+
+def _path_both_ways(spark, k):
+    """The 2k (u, v) rows of a k-edge path in both directions, over three
+    partitions: the frame shape the gate probes."""
+    e = spark.range(0, k, 1, 3).select(
+        F.col("id").alias("u"), (F.col("id") + 1).alias("v")
+    )
+    return e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+
+def test_driver_edges_bounds_at_the_gate(spark, monkeypatch):
+    """The probe's own collect is the size check: at the gate the whole
+    frame comes back in one job, one row over it comes back as None, and
+    the empty frame is under any gate."""
+    monkeypatch.setattr(core, "DRIVER_LOOP_ROW_LIMIT", 8)
+    g, jobs = jobs_in_group(
+        spark, "driver-edges-at-gate", lambda: core.driver_edges(_path_both_ways(spark, 4))
+    )
+    assert jobs == 1
+    nodes, u, v = g
+    assert list(nodes) == [0, 1, 2, 3, 4]
+    assert sorted(zip(nodes[u].tolist(), nodes[v].tolist())) == sorted(
+        [(i, i + 1) for i in range(4)] + [(i + 1, i) for i in range(4)]
+    )
+    over = _path_both_ways(spark, 5).limit(9)  # one row over the gate
+    assert core.driver_edges(over) is None
+    assert [len(a) for a in core.driver_edges(over.limit(0))] == [0, 0, 0]
+    monkeypatch.setattr(core, "DRIVER_LOOP_ROW_LIMIT", 0)
+    assert [len(a) for a in core.driver_edges(over.limit(0))] == [0, 0, 0]
+
+
+def test_loops_switch_regime_at_the_gate(spark, monkeypatch):
+    """A loop whose directed edges fill the gate runs its driver kernel;
+    at a gate one row smaller it runs the Spark loop, to the same rows.
+    An empty edge list takes the driver path even at a zero gate."""
+    calls = []
+    kernel = G._kcore_driver
+    monkeypatch.setattr(G, "_kcore_driver", lambda *a: calls.append(1) or kernel(*a))
+    und = _und(spark, COMPONENTS)  # 7 edges, 14 directed rows
+    rows = {}
+    for gate in (14, 13):
+        monkeypatch.setattr(core, "DRIVER_LOOP_ROW_LIMIT", gate)
+        rows[gate] = sorted(tuple(r) for r in G.kcore_layers(und, 2, n_parts=2).collect())
+        assert len(calls) == 1, gate
+    assert rows[14] == rows[13]
+    monkeypatch.setattr(core, "DRIVER_LOOP_ROW_LIMIT", 0)
+    assert G.kcore_layers(und.limit(0), 2, n_parts=2).count() == 0
+    assert len(calls) == 2
 
 
 def test_cc_driver_raises_when_sweeps_run_out(spark, monkeypatch):
@@ -131,7 +181,23 @@ def test_cc_below_gate_runs_fixed_job_count(spark):
             spark, f"cc-driver-regime-{n}", lambda: D.cc_converged(pairs).collect()
         )
         assert {r["canonical_id"] for r in rows} == {0}
-    assert jobs[20] == jobs[200] <= 8, jobs
+    assert jobs[20] == jobs[200] == 5, jobs
+
+
+@pytest.mark.parametrize("query,expected", [
+    ("graph_kcore", 3), ("graph_sssp", 3), ("graph_lpa", 3),
+    ("graph_common_neighbors", 3),
+])
+def test_graph_query_driver_path_job_count(spark, query, expected):
+    """Under the gate a graph query runs three jobs: the edge distinct's
+    shuffle stage, the probe collect and the final collect.  No pre-gate
+    checkpoint, count or (m, n) aggregate runs."""
+    fn = getattr(G, query)
+    fn(spark, SF_SMOKE).collect()  # the first read infers the table schema
+    _, jobs = jobs_in_group(
+        spark, f"{query}-driver-jobs", lambda: fn(spark, SF_SMOKE).collect()
+    )
+    assert jobs == expected, jobs
 
 
 def test_driver_frame_aggregates_plan_no_exchange(spark):

@@ -7,6 +7,7 @@ from itertools import combinations
 
 from pyspark.sql import functions as F
 
+from lachesis_spark.operators import core
 from lachesis_spark.plans import graph_algos as G
 from tests.conftest import SF_SMOKE
 
@@ -124,9 +125,11 @@ def test_kcore_layers_match_bruteforce(spark):
     assert max(got.values()) >= 2  # peeling actually cascades at smoke SF
 
 
-def test_kcore_never_touches_session_conf(spark):
+def test_kcore_never_touches_session_conf(spark, monkeypatch):
     """Same invariant the judge demanded of cc_converged/inverse_newton:
-    the peel loop scopes shuffle width per-frame, not via session conf."""
+    the peel loop scopes shuffle width per-frame, not via session conf.
+    The zeroed gate keeps the smoke graph on the Spark loop."""
+    monkeypatch.setattr(core, "DRIVER_LOOP_ROW_LIMIT", 0)
     before = spark.conf.get("spark.sql.shuffle.partitions")
     und = G.undirected_edges(spark, SF_SMOKE)
     G.kcore_layers(und, k=3, n_parts=4).count()
@@ -190,13 +193,14 @@ def test_sssp_levels_contiguous_and_rooted(spark):
     assert df.iloc[0].min_node == src == df.iloc[0].max_node
 
 
-def test_sssp_neighbors_of_source_are_level_one(spark):
+def test_sssp_neighbors_of_source_are_level_one(spark, monkeypatch):
     from lachesis_spark.plans.graph_algos import sssp_hops, undirected_edges
     import pyspark.sql.functions as F
 
     sf = "/root/testdata/sf0.001"
     und = undirected_edges(spark, sf).localCheckpoint(eager=True)
     src = int(und.agg(F.min("a")).collect()[0][0])
+    monkeypatch.setattr(core, "DRIVER_LOOP_ROW_LIMIT", 0)  # the Spark loop
     d = sssp_hops(und, src)
     nbrs = (
         und.filter((F.col("a") == src) | (F.col("b") == src))
@@ -209,7 +213,7 @@ def test_sssp_neighbors_of_source_are_level_one(spark):
     assert bad == 0
 
 
-def test_lpa_communities_partition_the_nodes(spark):
+def test_lpa_communities_partition_the_nodes(spark, monkeypatch):
     from lachesis_spark.plans.graph_algos import (
         graph_lpa,
         lpa_labels,
@@ -219,7 +223,9 @@ def test_lpa_communities_partition_the_nodes(spark):
 
     sf = "/root/testdata/sf0.001"
     und = undirected_edges(spark, sf).localCheckpoint(eager=True)
-    lab = lpa_labels(und)
+    with monkeypatch.context() as mp:  # the Spark loop; graph_lpa below
+        mp.setattr(core, "DRIVER_LOOP_ROW_LIMIT", 0)  # keeps the driver
+        lab = lpa_labels(und)
     n_nodes = (
         und.select(F.col("a").alias("v"))
         .unionAll(und.select(F.col("b").alias("v")))

@@ -31,7 +31,7 @@ def main() -> None:
     spark = get_spark("job_count_probe")
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
-    spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
+    spark.range(1 << 16).selectExpr("sum(id)").collect()  # JVM warm-up
 
     def jobs() -> int:
         return int(jsc.dagScheduler().nextJobId())

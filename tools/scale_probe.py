@@ -9,9 +9,14 @@ text gets a per-copy suffix so dedup does not become quadratic *by
 construction* — copy k of a doc is not a near-dup of copy j).  region and
 nation stay fixed-size, exactly like TPC-H at any SF.
 
-Then each headline query runs steady-state (untimed warm-up + timed run,
-same protocol as bench.py) at sf0.1 and at the scaled SF, and we report
-the time ratio and the scaling exponent  e = log(t_big/t_small)/log(N):
+Each headline query first runs steady-state (untimed warm-up + timed run,
+same protocol as bench.py) at sf0.1, which records the tables it reads
+through ``binding.base_table``.  Only those tables are built at the scaled
+SF (a table of an earlier build that these queries do not read is
+removed, so a read outside ``base_table`` fails with PATH_NOT_FOUND
+instead of timing a stale copy).  Then each query runs the same way at
+the scaled SF, and we report the time ratio and the scaling exponent
+e = log(t_big/t_small)/log(N):
 e <= ~1 is linear or better, e >> 1 means a super-linear plan that would
 not survive 100 TB.  Fixed per-query overhead (JVM scheduling, Python
 driver) deflates exponents at these sizes, so the signal to act on is a
@@ -20,6 +25,7 @@ LARGE exponent, not a small one.
 Usage:
     python tools/scale_probe.py [--factor 10] [--out /tmp/scale_sf1]
         [--queries q1,q2,...] [--skip-build]
+``--skip-build`` times whatever an earlier ``--keep`` run left in ``--out``.
 Writes one JSON line (driver-style) and a markdown table to stdout.
 """
 
@@ -70,14 +76,22 @@ DEFAULT_QUERIES = [
 ]
 
 
-def build_scaled(spark: SparkSession, src: str, out: str, factor: int) -> None:
+def build_scaled(
+    spark: SparkSession, src: str, out: str, factor: int, tables: set[str]
+) -> None:
+    """Write the ×``factor`` copy of each table in ``tables`` under ``out``,
+    and remove every other table an earlier build left there."""
     os.makedirs(out, exist_ok=True)
+    for name in [*FIXED_TABLES, *SHIFT_COLS]:
+        if name not in tables:
+            shutil.rmtree(os.path.join(out, f"{name}.parquet"), ignore_errors=True)
     for name in FIXED_TABLES:
-        df = spark.read.parquet(os.path.join(src, f"{name}.parquet"))
-        df.write.mode("overwrite").parquet(os.path.join(out, f"{name}.parquet"))
+        if name in tables:
+            df = spark.read.parquet(os.path.join(src, f"{name}.parquet"))
+            df.write.mode("overwrite").parquet(os.path.join(out, f"{name}.parquet"))
     for name, keys in SHIFT_COLS.items():
         path = os.path.join(src, f"{name}.parquet")
-        if not os.path.exists(path):
+        if name not in tables or not os.path.exists(path):
             continue
         df = spark.read.parquet(path)
         copies: list[DataFrame] = []
@@ -131,6 +145,7 @@ def main() -> None:
     ap.add_argument("--keep", action="store_true", help="keep the scaled dataset")
     args = ap.parse_args()
 
+    from lachesis_spark.binding import bound
     from lachesis_spark.registry import QUERIES
     from lachesis_spark.session import get_spark
 
@@ -140,17 +155,25 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
 
+    read: set[str] = set()
+
+    def record(_spark, _sf_dir, name):
+        read.add(name)
+        return None  # fall through to the default read
+
+    with bound(record):
+        t_smalls = {q: time_query(QUERIES[q], spark, SRC_SF) for q in qnames}
+
     if not args.skip_build:
         t0 = time.perf_counter()
-        build_scaled(spark, SRC_SF, args.out, args.factor)
-        print(f"# built x{args.factor} dataset in {time.perf_counter()-t0:.1f}s "
-              f"at {args.out}", file=sys.stderr)
+        build_scaled(spark, SRC_SF, args.out, args.factor, read)
+        print(f"# built x{args.factor} tables {sorted(read)} in "
+              f"{time.perf_counter()-t0:.1f}s at {args.out}", file=sys.stderr)
 
     results: dict[str, dict] = {}
     for q in qnames:
-        fn = QUERIES[q]
-        t_small = time_query(fn, spark, SRC_SF)
-        t_big = time_query(fn, spark, args.out)
+        t_small = t_smalls[q]
+        t_big = time_query(QUERIES[q], spark, args.out)
         exp = math.log(max(t_big, 1e-9) / max(t_small, 1e-9)) / math.log(args.factor)
         results[q] = {
             "t_sf0.1": round(t_small, 3),
