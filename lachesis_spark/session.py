@@ -73,6 +73,14 @@ def get_spark(
         # out of the executed plan text, and the 100-char default truncates
         # long catalog paths mid-field, mangling the parsed dataset name
         .config("spark.sql.maxMetadataStringLength", "4096")
+        # Generated-class cache: Spark's default keeps 100 classes, but one
+        # pass of the perfbench relational workload makes 110, so every warm
+        # pass recompiled 20-60 of them with Janino (3-9 ms each on the
+        # driver).  One full registry pass at sf0.01 makes 2,608 distinct
+        # classes; 4096 holds that with ~1.5x headroom.  Metaspace after
+        # such a pass was level (231 MB at 100, 227 MB at 4096).  Static:
+        # it takes effect only on a new JVM.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # Python workers (pandas UDFs, Python data sources) import this
         # package too; put its root on their path, whatever the cwd
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)

@@ -196,6 +196,21 @@ class RowGroupSpan(InputPartition):
     first_rg: int
     n_rg: int
 
+    def scan(self, columns: List[str], expr=None) -> "pa.RecordBatchReader":
+        """The span's rows projected to ``columns`` and filtered by the
+        pyarrow expression ``expr``, as Arrow batches."""
+        import pyarrow.dataset as pads
+        from pyarrow import fs as pafs
+
+        fragment = pads.ParquetFileFormat().make_fragment(
+            self.file,
+            filesystem=pafs.LocalFileSystem(),
+            row_groups=list(range(self.first_rg, self.first_rg + self.n_rg)),
+        )
+        return pads.Scanner.from_fragment(
+            fragment, columns=columns, filter=expr, use_threads=False
+        ).to_reader()
+
 
 def _arrow_filter(filters: List[Filter]):
     """AND-fold supported Filters into one pyarrow compute expression."""
@@ -279,8 +294,9 @@ class LachesisReader(DataSourceReader):
     def partitions(self) -> List[RowGroupSpan]:
         import pyarrow.parquet as pq
 
+        files = _parquet_files(self.path)
         spans: list[RowGroupSpan] = []
-        for path in _parquet_files(self.path):
+        for path in files:
             md = pq.ParquetFile(path).metadata
             first, span_bytes = 0, 0
             for i in range(md.num_row_groups):
@@ -290,30 +306,13 @@ class LachesisReader(DataSourceReader):
                     first, span_bytes = i + 1, 0
             if first < md.num_row_groups:
                 spans.append(RowGroupSpan(path, first, md.num_row_groups - first))
-            if md.num_row_groups == 0:
-                continue
-        return spans or [RowGroupSpan(_parquet_files(self.path)[0], 0, 0)]
+        return spans or [RowGroupSpan(files[0], 0, 0)]
 
     def read(self, partition: RowGroupSpan) -> Iterator["pa.RecordBatch"]:
-        import pyarrow.dataset as pads
-        import pyarrow.parquet as pq
-
         if partition.n_rg == 0:
             return
-        cols = [f.name for f in self.schema.fields]
-        from pyarrow import fs as pafs
-
-        frag_format = pads.ParquetFileFormat()
-        fragment = frag_format.make_fragment(
-            partition.file,
-            filesystem=pafs.LocalFileSystem(),
-            row_groups=list(range(partition.first_rg, partition.first_rg + partition.n_rg)),
-        )
         expr = _arrow_filter(self.pushed) if self.pushed else None
-        scanner = pads.Scanner.from_fragment(
-            fragment, columns=cols, filter=expr, use_threads=False
-        )
-        yield from scanner.to_reader()
+        yield from partition.scan([f.name for f in self.schema.fields], expr)
 
 
 @dataclass
@@ -437,18 +436,7 @@ class LachesisStreamReader(DataSourceStreamReader):
         return spans
 
     def read(self, partition: RowGroupSpan) -> Iterator["pa.RecordBatch"]:
-        import pyarrow.dataset as pads
-        from pyarrow import fs as pafs
-
-        frag = pads.ParquetFileFormat().make_fragment(
-            partition.file,
-            filesystem=pafs.LocalFileSystem(),
-            row_groups=list(range(partition.first_rg, partition.first_rg + partition.n_rg)),
-        )
-        scanner = pads.Scanner.from_fragment(
-            frag, columns=[f.name for f in self.schema.fields], use_threads=False
-        )
-        yield from scanner.to_reader()
+        yield from partition.scan([f.name for f in self.schema.fields])
 
     def commit(self, end: dict) -> None:
         # offsets live in the query checkpoint — nothing source-side to gc —
@@ -745,4 +733,10 @@ def register(spark) -> None:
     # the reader implements pushFilters(); Spark refuses to plan it unless
     # Python-source pushdown is switched on (off by default in 4.1)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(LachesisDataSource)
+    # register once per session: registering again replaces the source and
+    # the JVM logs a warning each time.  No public API asks whether a name
+    # is registered, so this reads SessionState.dataSourceManager, a Spark
+    # 4.1 internal; a different class already registered as "lachesis" is
+    # left in place.
+    if not spark._jsparkSession.sessionState().dataSourceManager().dataSourceExists("lachesis"):
+        spark.dataSource.register(LachesisDataSource)

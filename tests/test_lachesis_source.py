@@ -264,10 +264,6 @@ def test_row_group_spans_cover_all_rows(spark):
     import pyarrow.parquet as pq
 
     path = os.path.join(SF_DIR, "lineitem.parquet")
-
-    class Opts(dict):
-        pass
-
     reader = LachesisReader({"path": path}, spark.read.parquet(path).schema)
     spans = reader.partitions()
     per_file: dict[str, list[int]] = {}
@@ -377,6 +373,130 @@ def test_stream_reader_cursor_survives_restart(tmp_path):
     nxt = r3.latestOffset()
     assert nxt["key"] > offs[3]["key"]
     assert len(r3.partitions(offs[3], nxt)) == 1
+
+
+def _split_events(tmp_path, n_files: int, name: str = "tail_src"):
+    """The smoke events table cut into ``n_files`` parquet files whose
+    mtimes follow row order, the order a tail admits them in; returns the
+    directory, the table and the time stamp the last file got."""
+    import time
+
+    import pyarrow.parquet as pq
+
+    ev = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
+    src = tmp_path / name
+    src.mkdir()
+    t0 = time.time() - 1000
+    cut = [ev.num_rows * i // n_files for i in range(n_files + 1)]
+    for i in range(n_files):
+        f = str(src / f"{i:02d}.parquet")
+        pq.write_table(ev.slice(cut[i], cut[i + 1] - cut[i]), f)
+        os.utime(f, (t0 + i, t0 + i))
+    return src, ev, t0 + n_files - 1
+
+
+def test_rate_limited_and_unbounded_tails_return_identical_rows(spark, tmp_path):
+    """A maxFilesPerTrigger tail and an unbounded one return the same rows,
+    every column (the events timestamps too), as a batch read of the same
+    files."""
+    src, ev, _ = _split_events(tmp_path, 4)
+
+    def tail(qname, rate):
+        reader = spark.readStream.format("lachesis")
+        if rate:
+            reader = reader.option("maxFilesPerTrigger", rate)
+        q = (
+            reader.load(str(src)).writeStream.format("memory").queryName(qname)
+            .outputMode("append").trigger(processingTime="0 seconds").start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        got = sorted(map(tuple, spark.table(qname).collect()))
+        spark.catalog.dropTempView(qname)
+        return got, len(batches)
+
+    limited, n_batches = tail("tail_limited", 1)
+    unbounded, _ = tail("tail_unbounded", None)
+    assert n_batches == 4  # one file per microbatch
+    batch_df = spark.read.format("lachesis").load(str(src))
+    assert "ts" in batch_df.columns
+    batch = sorted(map(tuple, batch_df.collect()))
+    assert len(limited) == ev.num_rows
+    assert limited == unbounded == batch
+
+
+def test_rate_limited_tail_restart_is_exactly_once(spark, tmp_path):
+    """End to end through Spark: a checkpointed maxFilesPerTrigger=1 tail
+    stopped after its first microbatch, restarted, then fed an appended
+    file, writes every source row exactly once, one microbatch per file."""
+    import pyarrow.parquet as pq
+
+    root = tmp_path / "root"
+    src, ev, t_last = _split_events(tmp_path, 3)
+    ck = str(tmp_path / "ck")
+
+    def start(**trigger):
+        return (
+            spark.readStream.format("lachesis").option("maxFilesPerTrigger", 1)
+            .load(str(src)).writeStream.format("lachesis").option("root", str(root))
+            .option("checkpointLocation", ck).trigger(**trigger).start("db.dst")
+        )
+
+    q = start(once=True)
+    q.awaitTermination()
+    dst = lambda: spark.read.format("lachesis").option("root", str(root)).load("db.dst")
+    assert dst().count() == ev.num_rows // 3
+
+    q = start(processingTime="0 seconds")
+    try:
+        q.processAllAvailable()
+        assert dst().count() == ev.num_rows
+        # append the way set writers do while the tail polls: stage under
+        # a hidden name, then rename in
+        staged = str(src / ".03.parquet.tmp")
+        pq.write_table(ev, staged)
+        os.utime(staged, (t_last + 10, t_last + 10))
+        os.rename(staged, str(src / "03.parquet"))
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert sorted(map(tuple, dst().collect())) == sorted(
+        map(tuple, spark.read.parquet(str(src)).collect())
+    )
+    assert sorted(os.listdir(root / "db" / "dst" / "_commits")) == ["0", "1", "2", "3"]
+
+
+def test_register_is_idempotent(spark, monkeypatch):
+    """register() registers the source once per session: a second call
+    only re-asserts the pushdown conf (re-registering replaces the source
+    and makes the JVM log a warning per call)."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    calls = []
+    real = DataSourceRegistration.register
+    monkeypatch.setattr(
+        DataSourceRegistration, "register", lambda self, ds: calls.append(ds) or real(self, ds)
+    )
+    register(spark)
+    assert calls == []
+    # a new session has its own data source registry; Spark checks a
+    # registration against the active session's, so make it active
+    fresh = spark.newSession()
+    fresh.conf.set("spark.sql.python.filterPushdown.enabled", "false")
+    active = spark._jvm.org.apache.spark.sql.SparkSession
+    active.setActiveSession(fresh._jsparkSession)
+    try:
+        for _ in range(3):
+            register(fresh)
+        assert len(calls) == 1
+        assert fresh.conf.get("spark.sql.python.filterPushdown.enabled") == "true"
+        path = os.path.join(SF_DIR, "nation.parquet")
+        assert fresh.read.format("lachesis").load(path).count() == 25
+    finally:
+        active.setActiveSession(spark._jsparkSession)
 
 
 def test_ensure_layout_table_never_drops_managed_tables(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Per-query Spark JOB and STAGE counts + wall time.
+"""Per-query Spark JOB and STAGE counts, codegen compiles + wall time.
 
 Host-noise-immune structural metric used throughout OPTIMIZATION_r11.md:
 run-to-run wall scatter on a shared host is 2-3x, but the number of jobs and
@@ -6,7 +6,10 @@ stages a query launches is a property of the code, so before/after counts
 are the evidence wall-clock cannot fake.  Jobs are the
 DAGScheduler.nextJobId delta; stages are the stages that ran (completed or
 failed, not skipped) in the query's jobs, read from the status store
-through a per-query job group.  Usage:
+through a per-query job group.  Compiles are the Janino compilations the
+query caused (``CodegenMetrics``' compilation count delta): a class found
+in the generated-code cache costs none, so a warm round should show 0.
+Usage:
 
     python tools/job_count_probe.py [sf_dir] q1 q2 ...
 """
@@ -36,6 +39,11 @@ def main() -> None:
     def jobs() -> int:
         return int(jsc.dagScheduler().nextJobId())
 
+    compile_time = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def compiles() -> int:
+        return int(compile_time.getCount())
+
     def stages(group: str) -> int:
         jsc.listenerBus().waitUntilEmpty(10_000)
         store = jsc.statusStore()
@@ -48,13 +56,13 @@ def main() -> None:
     for k, name in enumerate(names):
         group = f"probe:{k}:{name}"
         sc.setJobGroup(group, group)
-        j0 = jobs()
+        j0, c0 = jobs(), compiles()
         t0 = time.perf_counter()
         QUERIES[name](spark, sf_dir).count()
         sec = time.perf_counter() - t0
-        n_jobs = jobs() - j0
+        n_jobs, n_compiles = jobs() - j0, compiles() - c0
         print(
-            f"{name}: jobs={n_jobs} stages={stages(group)} wall={sec:.2f}s",
+            f"{name}: jobs={n_jobs} stages={stages(group)} compiles={n_compiles} wall={sec:.2f}s",
             flush=True,
         )
         spark.catalog.clearCache()
