@@ -38,37 +38,3 @@ def scale(a: Column, s: Column | float) -> Column:
 
 def add(a: Column, b: Column) -> Column:
     return F.zip_with(a, b, lambda x, y: x + y)
-
-
-def arr_lit(vals) -> Column:
-    """Python floats as ONE parsed array<double> literal.  ``F.lit`` of
-    the same list converts element-by-element over py4j — measured at
-    >1 s for a few thousand doubles — while one ``F.expr`` parse is
-    ~20 ms; ``repr`` round-trips every double exactly, so the parsed
-    literal is bit-identical to the F.lit form."""
-    return F.expr(
-        "array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")"
-    )
-
-
-def mat_lit(rows) -> Column:
-    """List-of-lists of Python floats as one parsed
-    array<array<double>> literal (see arr_lit for why expr, not lit)."""
-    return F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(repr(float(v)) + "D" for v in row) + ")"
-            for row in rows
-        )
-        + ")"
-    )
-
-
-def matvec(m_t: Column, x: Column, n_out: int) -> Column:
-    """y[k] = dot(row k of m_t, x) — a dense mat-vec as one
-    transform-over-sequence fold; m_t holds the TRANSPOSED matrix (row k
-    = output dim k's weights)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_out - 1)),
-        lambda k: dot(F.element_at(m_t, k + 1), x),
-    )

@@ -485,9 +485,6 @@ def _jl_matrix(d_out: int = JL_D_OUT):
     return [[sign(j, k) for k in range(d_out)] for j in range(JL_D_IN)]
 
 
-_JL_R = _jl_matrix()
-
-
 def _jl_lit(d_out: int = JL_D_OUT):
     """The transposed R matrix (row k = output dim k's ±1 weights) as ONE
     parsed SQL nested-array literal.  ``F.lit`` of the same nested list

@@ -18,20 +18,23 @@ Scale notes:
   power-law skew of popular dst nodes.
 - KMeans broadcasts k×dim centroids per iteration (tiny) and does one
   map-side-combined groupBy per iteration — the canonical Lloyd's dataflow.
-- FF inference is two chained COO matmuls with broadcast weight matrices:
-  weights are generated *inside the engines* from md5 bits, so Spark and
-  DuckDB compute bit-identical networks with no weight files.
+- FF and LSTM inference are dense numpy kernels over the embeddings'
+  Arrow batches (one narrow ``mapInArrow`` stage, no join or shuffle): the
+  weights are a few KB of md5-derived numpy arrays built on the driver,
+  and the DuckDB oracle derives the same values from the same md5 bits,
+  so both engines compute one network with no weight files.
 """
 
 from __future__ import annotations
 
-import os
+import hashlib
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lachesis_spark.functions import hashing as H
-from lachesis_spark.functions import vectors as V
 
 from lachesis_spark.binding import base_table
 
@@ -222,6 +225,21 @@ def _emb_arr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _km_assign(df: DataFrame, cents: dict) -> DataFrame:
+    """``df`` plus each row's nearest centroid id in ``cluster`` (squared
+    L2 against the literal centroids; ties go to the lowest id)."""
+    structs = []
+    for c, vec in sorted(cents.items()):
+        cl = F.array(*[F.lit(x) for x in vec])
+        d = F.aggregate(
+            F.zip_with(F.col("e"), cl, lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        structs.append(F.struct(d.alias("d"), F.lit(c).alias("c")))
+    return df.withColumn("cluster", F.least(*structs)["c"])
+
+
 def kmeans_assign(spark, sf_dir):
     """3 Lloyd iterations, centroids seeded from vec_id 0..3; returns the
     final (vec_id, cluster) assignment.  Centroids are collected to the
@@ -233,20 +251,8 @@ def kmeans_assign(spark, sf_dir):
         for r in emb.filter(F.col("vec_id") < KM_K).collect()
     }
 
-    def assign(df, cents):
-        structs = []
-        for c, vec in sorted(cents.items()):
-            cl = F.array(*[F.lit(x) for x in vec])
-            d = F.aggregate(
-                F.zip_with(F.col("e"), cl, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            structs.append(F.struct(d.alias("d"), F.lit(c).alias("c")))
-        return df.withColumn("cluster", F.least(*structs)["c"])
-
     for _ in range(KM_ITERS):
-        assigned = assign(emb, cents)
+        assigned = _km_assign(emb, cents)
         new_cents = (
             assigned.select("cluster", F.posexplode("e").alias("j", "v"))
             .groupBy("cluster", "j")
@@ -258,7 +264,7 @@ def kmeans_assign(spark, sf_dir):
             cents.setdefault(int(r["cluster"]), {})[int(r["j"])] = float(r["v"])
         cents = {c: [d[j] for j in sorted(d)] for c, d in cents.items()}
 
-    return assign(emb, cents).select(
+    return _km_assign(emb, cents).select(
         "vec_id", F.col("cluster").cast("int").alias("cluster")
     )
 
@@ -277,21 +283,9 @@ def kmeans_converged(spark, sf_dir, tol: float = 1e-9, max_iters: int = 200):
             for r in emb.filter(F.col("vec_id") < KM_K).collect()
         }
 
-        def assign(df, cents):
-            structs = []
-            for c, vec in sorted(cents.items()):
-                cl = F.array(*[F.lit(x) for x in vec])
-                d = F.aggregate(
-                    F.zip_with(F.col("e"), cl, lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                structs.append(F.struct(d.alias("d"), F.lit(c).alias("c")))
-            return df.withColumn("cluster", F.least(*structs)["c"])
-
         it = 0
         for it in range(1, max_iters + 1):
-            assigned = assign(emb, cents)
+            assigned = _km_assign(emb, cents)
             new_rows = (
                 assigned.select("cluster", F.posexplode("e").alias("j", "v"))
                 .groupBy("cluster", "j")
@@ -311,7 +305,7 @@ def kmeans_converged(spark, sf_dir, tol: float = 1e-9, max_iters: int = 200):
                 break
         else:  # pragma: no cover - defensive bound
             raise RuntimeError(f"kmeans did not converge in {max_iters} iterations")
-        out = assign(emb, cents).select(
+        out = _km_assign(emb, cents).select(
             "vec_id", F.col("cluster").cast("int").alias("cluster")
         )
         rows = [tuple(r) for r in out.collect()]
@@ -372,54 +366,61 @@ def _sql_w(tag: str, a: str, b: str) -> str:
     return f"(({h} % 2001 - 1000) / 1000.0)"
 
 
+def _py_w(tag: str, a: int, b: int) -> float:
+    """The _sql_w weight as a Python float: identical md5-derived value
+    (h60 = first 15 md5 hex digits; % 2001 - 1000 over 1000.0 is the
+    same IEEE division both engines perform on the same integer)."""
+    h = int(hashlib.md5(f"{tag}|{a}|{b}".encode()).hexdigest()[:15], 16)
+    return (h % 2001 - 1000) / 1000.0
+
+
+def _w_mat(tag: str, rows: int, cols: int) -> np.ndarray:
+    """The (rows, cols) matrix of ``_py_w(tag, r, c)``; a bias is the
+    (1, cols) row ``_w_mat(tag, 1, cols)`` (the oracle's a = 0)."""
+    return np.array([[_py_w(tag, r, c) for c in range(cols)] for r in range(rows)])
+
+
+def _map_embeddings(spark, sf_dir, schema: str, kernel) -> DataFrame:
+    """One narrow mapInArrow stage over the embeddings: ``kernel(ids, x)``
+    turns a batch's vec_id column and its (n, FF_DIM) float64 embedding
+    matrix into a RecordBatch of ``schema``.
+
+    The size guard keeps every row FF_DIM wide, which the reshape into x
+    needs.  The generated data is fixed-width, so it drops nothing (the
+    oracle's unnest would drop an empty vector and partial-sum a ragged
+    one)."""
+
+    def run(batches):
+        for batch in batches:
+            x = batch.column("embedding").flatten().to_numpy()
+            yield kernel(batch.column("vec_id"),
+                         x.astype(np.float64).reshape(-1, FF_DIM))
+
+    return (
+        base_table(spark, sf_dir, "embeddings")
+        .filter(F.size("embedding") == FF_DIM)
+        .select("vec_id", "embedding")
+        .mapInArrow(run, schema)
+    )
+
+
 def ff_inference(spark, sf_dir):
     """relu(x·W1 + b1)·W2 + b2 per vector, argmax class (ties -> lowest
-    class id, matching the oracle's row_number ORDER BY score DESC, cls).
+    class id, matching the oracle's row_number ORDER BY score DESC, cls:
+    numpy's argmax returns the first maximum)."""
+    w1, b1 = _w_mat("w1", FF_DIM, FF_HID), _w_mat("b1", 1, FF_HID)
+    w2, b2 = _w_mat("w2", FF_HID, FF_CLS), _w_mat("b2", 1, FF_CLS)
 
-    The weights are deterministic hash literals, so — like
-    lstm_inference — the whole network is PER-ROW array arithmetic
-    against parsed weight-matrix literals (V.mat_lit/matvec): no COO
-    explode, no broadcast weight joins, no (i, h)/(i, cls) groupBy
-    exchanges, no argmax window shuffle.  The argmax itself is
-    array_max + array_position (first occurrence == lowest cls on
-    ties).  The old COO form planned 18 Exchanges / 12 jobs; this is a
-    single narrow map over the embeddings scan."""
-    w1t = V.mat_lit(
-        [[_lstm_py_w("w1", j, h) for j in range(FF_DIM)] for h in range(FF_HID)]
-    )
-    b1 = V.arr_lit([_lstm_py_w("b1", 0, h) for h in range(FF_HID)])
-    w2t = V.mat_lit(
-        [[_lstm_py_w("w2", h, c) for h in range(FF_HID)] for c in range(FF_CLS)]
-    )
-    b2 = V.arr_lit([_lstm_py_w("b2", 0, c) for c in range(FF_CLS)])
-
-    from lachesis_spark.operators.core import parallelism_floor
-
-    # Dimensional guard (round-11 ADVICE): the array rewrite would emit a
-    # bias-only row for an EMPTY embedding and a NULL score for a ragged/
-    # null element, where the old COO posexplode form and the oracle's
-    # unnest drop or partial-sum them.  The generated data is fixed-width,
-    # so this filter drops nothing today; it pins unnest semantics if the
-    # source ever carries ragged vectors.
-    base = parallelism_floor(
-        _emb_arr(spark, sf_dir).filter(F.size("e") == FF_DIM), spark
-    )
-    hid = F.zip_with(
-        V.matvec(w1t, F.col("e"), FF_HID), b1,
-        lambda x, b: F.greatest(x + b, F.lit(0.0)),
-    )
-    scores = F.zip_with(
-        V.matvec(w2t, F.col("hv"), FF_CLS), b2, lambda s, b: s + b
-    )
-    return (
-        base.select("vec_id", hid.alias("hv"))
-        .select("vec_id", scores.alias("scores"))
-        .select(
-            "vec_id",
-            (F.array_position(F.col("scores"), F.array_max(F.col("scores"))) - 1)
-            .cast("int").alias("pred_class"),
-            F.array_max(F.col("scores")).alias("score"),
+    def kernel(ids, x):
+        scores = np.maximum(x @ w1 + b1, 0.0) @ w2 + b2
+        return pa.RecordBatch.from_arrays(
+            [ids, pa.array(scores.argmax(axis=1).astype(np.int32)),
+             pa.array(scores.max(axis=1))],
+            names=["vec_id", "pred_class", "score"],
         )
+
+    return _map_embeddings(
+        spark, sf_dir, "vec_id bigint, pred_class int, score double", kernel
     )
 
 
@@ -459,141 +460,50 @@ SELECT i AS vec_id, CAST(cls AS INTEGER) AS pred_class, score FROM (
 
 
 # ---------------------------------------------------------------------------
-# LSTM cell inference, 2 unrolled timesteps over the embedding vectors.
+# LSTM cell inference, LSTM_T timesteps over the embedding vectors.
 # Reference analog: src/LSTM/headers/LSTMThreeWaySum.h (gate sums with
 # sigmoid/tanh activation over aligned matrix blocks), LSTMTwoSum.h,
 # LSTMHiddenState.h (hidden-state matmul + tanh) — there composed as
-# JoinComps over FFMatrixBlock; here the same dataflow over COO with the
-# four gates carried as parallel aggregate columns (one join computes all
-# gate pre-activations), md5-derived weights as in ff_inference.
+# JoinComps over FFMatrixBlock; here the same block math runs in numpy on
+# each Arrow batch, the four gates side by side in one weight matrix,
+# md5-derived weights as in ff_inference.
 LSTM_HID = 8
-# Sequence depth.  The reference's LSTM workload processes full sequences
-# (src/LSTM/headers/); round 7 unrolled only 2 steps — shape parity without
-# depth parity.  T=8 runs the real recurrence with per-step lineage
-# checkpointing (_maybe_checkpoint, every=2), so per-step cost stays flat:
-# each step is one broadcast-U join + one (i, h) aggregation regardless of
-# how many steps preceded it.
+# Sequence depth: the reference's LSTM workload processes full sequences
+# (src/LSTM/headers/).  A step is one (n, H)·(H, 4H) matmul inside the
+# batch, so depth costs executor arithmetic only: no job, stage or plan
+# node per step.
 LSTM_T = 8
-LSTM_CHECKPOINT_EVERY = 2
-
-
-def _lstm_py_w(tag: str, a: int, b: int) -> float:
-    """The _wexpr weight as a Python float: identical md5-derived value
-    (h60 = first 15 md5 hex digits; % 2001 - 1000 over 1000.0 is the
-    same IEEE division both engines perform on the same integer)."""
-    import hashlib
-
-    h = int(hashlib.md5(f"{tag}|{a}|{b}".encode()).hexdigest()[:15], 16)
-    return (h % 2001 - 1000) / 1000.0
-
-
-def _sigmoid(c):
-    return 1.0 / (1.0 + F.exp(-c))
 
 
 def lstm_inference(spark, sf_dir):
     """h_T for each embedding vector after LSTM_T steps with x_t = the
     vector at every step, h_0 = c_0 = 0.  Output (vec_id, h, hv).
 
-    The gate weights are deterministic hash literals, so the whole
-    recurrence is PER-ROW array arithmetic against parsed weight-matrix
-    literals (V.mat_lit): x·W once, then T steps of hh·U plus
-    elementwise gates — zero joins and zero shuffles; one narrow map
-    over the embeddings scan replaces the old COO form's per-step
-    broadcast-U join + (i, h) groupBy exchange (7 exchanges and ~30
-    jobs for T=8).  Every step ends in a LAZY localCheckpoint: planning
-    happens per step against the previous step's LogicalRDD, which (a)
-    stops projection collapse from inlining each step's hh into ~4
-    references in the next — unchecked, the collapsed tree grows ~4^T
-    and analysis hangs — and (b) keeps the whole recurrence ONE Spark
-    job, since the chained narrow RDDs only materialize at the caller's
-    final action (the graph_lpa lazy-loop pattern)."""
-    H_, T = LSTM_HID, LSTM_T
-    wt = {
-        g: V.mat_lit(
-            [[_lstm_py_w(f"W{g}", j, h) for j in range(FF_DIM)] for h in range(H_)]
-        )
-        for g in "ifog"
-    }
-    ut = {
-        g: V.mat_lit(
-            [[_lstm_py_w(f"U{g}", hj, h) for hj in range(H_)] for h in range(H_)]
-        )
-        for g in "ifog"
-    }
-    # bias literal COLUMNS hoisted: each V.arr_lit pays an expr parse,
-    # so build the four of them once, not once per step reference
-    bl = {g: V.arr_lit([_lstm_py_w(f"b{g}", 0, h) for h in range(H_)]) for g in "ifog"}
+    W (FF_DIM, 4H), U (H, 4H) and b (1, 4H) hold the i, f, o, g gates
+    side by side, so x·W runs once and each step is one hh·U."""
+    hid = LSTM_HID
+    w = np.hstack([_w_mat(f"W{g}", FF_DIM, hid) for g in "ifog"])
+    u = np.hstack([_w_mat(f"U{g}", hid, hid) for g in "ifog"])
+    b = np.hstack([_w_mat(f"b{g}", 1, hid) for g in "ifog"])
 
-    # x·W once (x is the same at every step): four H_-wide gate arrays.
-    # The recurrence is expensive-per-row expression work, so floor the
-    # scan parallelism (single-file testdata scans as one split; no-op
-    # at scale — see operators.core.parallelism_floor).
-    from lachesis_spark.operators.core import parallelism_floor
+    def sig(z):
+        return 1.0 / (1.0 + np.exp(-z))
 
-    # same dimensional guard as ff_inference (round-11 ADVICE): pin the
-    # oracle's unnest semantics for ragged/empty vectors; drops nothing
-    # on the fixed-width generated data.
-    base = parallelism_floor(
-        _emb_arr(spark, sf_dir).filter(F.size("e") == FF_DIM), spark
-    ).select(
-        "vec_id",
-        *[V.matvec(wt[g], F.col("e"), H_).alias(f"x{g}") for g in "ifog"],
-    )
+    def kernel(ids, x):
+        xw = x @ w
+        c = hh = np.zeros((len(x), hid))
+        for _ in range(LSTM_T):
+            i, f, o, g = np.split(xw + hh @ u + b, 4, axis=1)
+            c = sig(f) * c + sig(i) * np.tanh(g)
+            hh = sig(o) * np.tanh(c)
+        return pa.RecordBatch.from_arrays(
+            [ids.take(np.repeat(np.arange(len(x)), hid)),
+             pa.array(np.tile(np.arange(hid, dtype=np.int64), len(x))),
+             pa.array(hh.ravel())],
+            names=["vec_id", "h", "hv"],
+        )
 
-    def el(name, k):
-        return F.element_at(F.col(name), k + 1)
-
-    seq = F.sequence(F.lit(0), F.lit(H_ - 1))
-    # step 0 (c_0 = h_0 = 0): p_g = x_g + b_g, c = σ(pi)·tanh(pg)
-    c0 = F.transform(
-        seq,
-        lambda k: _sigmoid(el("xi", k) + F.element_at(bl["i"], k + 1))
-        * F.tanh(el("xg", k) + F.element_at(bl["g"], k + 1)),
-    )
-    state = base.select(
-        "vec_id", "xi", "xf", "xo", "xg", c0.alias("c")
-    ).select(
-        "vec_id", "xi", "xf", "xo", "xg", "c",
-        F.transform(
-            seq,
-            lambda k: _sigmoid(el("xo", k) + F.element_at(bl["o"], k + 1))
-            * F.tanh(el("c", k)),
-        ).alias("hh"),
-    )
-    state = state.transform(_barrier)
-    for _t in range(1, T):
-        with_u = state.select(
-            "vec_id", "xi", "xf", "xo", "xg", "c", "hh",
-            *[V.matvec(ut[g], F.col("hh"), H_).alias(f"u{g}") for g in "ifog"],
-        )
-        pre = lambda g, k: (  # noqa: E731 — p_g[k] = x_g[k] + u_g[k] + b_g[k]
-            el(f"x{g}", k) + el(f"u{g}", k)
-            + F.element_at(bl[g], k + 1)
-        )
-        cn = F.transform(
-            seq,
-            lambda k: _sigmoid(pre("f", k)) * el("c", k)
-            + _sigmoid(pre("i", k)) * F.tanh(pre("g", k)),
-        )
-        nxt = with_u.select(
-            "vec_id", "xi", "xf", "xo", "xg", "uo", cn.alias("c")
-        ).select(
-            "vec_id", "xi", "xf", "xo", "xg", "c",
-            F.transform(
-                seq,
-                lambda k: _sigmoid(
-                    el("xo", k) + el("uo", k)
-                    + F.element_at(bl["o"], k + 1)
-                )
-                * F.tanh(el("c", k)),
-            ).alias("hh"),
-        )
-        state = nxt if _t == T - 1 else nxt.transform(_barrier)
-    return state.select(
-        "vec_id",
-        F.posexplode("hh").alias("h", "hv"),
-    ).select("vec_id", F.col("h").cast("long").alias("h"), "hv")
+    return _map_embeddings(spark, sf_dir, "vec_id bigint, h bigint, hv double", kernel)
 
 
 def _lstm_sql() -> str:

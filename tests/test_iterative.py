@@ -5,14 +5,36 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE, assert_matches_oracle
+from tests.conftest import SF_SMOKE, assert_matches_oracle, jobs_in_group
 
 
-@pytest.mark.parametrize("name", ["pagerank", "kmeans_assign", "ff_inference"])
+@pytest.mark.parametrize(
+    "name", ["pagerank", "kmeans_assign", "ff_inference", "lstm_inference"]
+)
 def test_iterative_oracle(spark, duck, name):
     from lachesis_spark.registry import ORACLE, QUERIES
 
     assert_matches_oracle(QUERIES[name](spark, SF_SMOKE), duck, ORACLE[name])
+
+
+@pytest.mark.parametrize("name", ["ff_inference", "lstm_inference"])
+def test_nn_inference_is_one_narrow_arrow_stage(spark, name):
+    """FF and LSTM inference are one mapInArrow stage over the embeddings
+    scan: a warm run (the file's schema already inferred) launches exactly
+    one job, and the plan holds no Exchange."""
+    from lachesis_spark.registry import QUERIES
+
+    QUERIES[name](spark, SF_SMOKE).collect()
+
+    def run():
+        df = QUERIES[name](spark, SF_SMOKE)
+        df.collect()
+        return df
+
+    df, jobs = jobs_in_group(spark, f"nn-warm-{name}", run)
+    assert jobs == 1
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "Exchange" not in plan, plan
 
 
 def test_pagerank_mass_bounded(spark):

@@ -27,7 +27,7 @@ BNLJ_OK = {
     "op_percentiles",       # 1-row exact-percentile thresholds
     "tpch_q11",             # 1-row group-total scalar
     "tpch_q22",             # 1-row avg-acctbal scalar
-    "lda_em", "lstm_inference",  # k×k / gate-constant matrices
+    "lda_em",               # LDA_K-row topic table crossed into the vocab
     "text_quality_filter",  # 1-row quantile threshold
     "search_bm25_topk",     # 1-row corpus stats (N, avgdl) scalar
     "search_tfidf_cosine",  # 1-row query-norm scalar cross
@@ -44,7 +44,6 @@ BNLJ_OK = {
     "dedup_recall",         # cross of two 1-row metric aggregates
     "ann_ivf",              # broadcast k-row centroid table
     "ann_recall",           # broadcast <=8-row probe set (ground-truth scan)
-    "ff_inference",         # constant-size weight matrices
     # block-pair generation over the block index; all-pairs is the declared
     # test-scale configuration — production composes the LSH prefilter
     # (see llm/dedup.py scale notes)

@@ -27,7 +27,7 @@ FEATURES = [
     ("partial-agg", r"partial_"),
     ("take-ordered", r"TakeOrderedAndProject"),
     ("window", r"RunningWindowFunction|Window"),
-    ("arrow-python", r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas"),
+    ("arrow-python", r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas|MapInArrow"),
     ("row-python", r"BatchEvalPython"),
 ]
 
@@ -43,7 +43,7 @@ def main() -> None:
         "SMJ=SortMergeJoin, BNLJ=BroadcastNestedLoopJoin (tiny-side only),",
         "pushdown=non-empty parquet PushedFilters, partial-agg=map-side",
         "combine, take-ordered=per-partition top-k heap, arrow-python=",
-        "Arrow-batched pandas UDF stage, row-python=per-row Python (should",
+        "Arrow-batched Python stage, row-python=per-row Python (should",
         "never appear).  Queries marked `eager` compute inside the query",
         "function (iterative / driver-bounded results released with their",
         "caches); their returned frame is a LocalTableScan, so read their",
